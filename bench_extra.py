@@ -20,161 +20,23 @@ import json
 import os
 import time
 
-from bench import _materialize, _synth_corpus_path, host_calibration
+import bench
+from bench import _synth_corpus_path, host_calibration
 
 
-def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
-    """The SAME DataFrames bench.build_queries materializes, returned
-    lazily (keys match bench.py's query names)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry
-    from pdftableextractor_spark.corpus import interleave_flat_documents
-    from pdftableextractor_spark.operators.dedup import (
-        minhash_near_dups,
-        semantic_dedup,
-        simhash_signatures,
-    )
-    from pdftableextractor_spark.operators.extract import (
-        extract_frames,
-        extract_spans,
-    )
-    from pdftableextractor_spark.operators.similarity import (
-        cosine_topk,
-        knn_join,
-    )
-    from pdftableextractor_spark.operators.structure import (
-        all_data_points,
-        dedup_first_wins,
-        footnote_points,
-        general_commentary_points,
-        kv_points,
-        lexical_commentary,
-        table_points,
-        text_fact_points,
-        unmatched_paragraphs,
-    )
-    from pdftableextractor_spark.operators.textstats import (
-        lang_id,
-        quality_score,
-        token_count,
-    )
-    from pdftableextractor_spark.operators.tokenize import bpe_encode, train_bpe
-
-    docs_flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs_str = docs_flat.withColumn("doc_id", F.col("doc_id").cast("string"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    synth = spark.read.parquet(synth_path)
-    bpe_merges = train_bpe(docs_str, n_merges=500)
-
-    def structure_points():
-        frames = extract_frames(interleave_flat_documents(docs_flat))
-        pts = dedup_first_wins(
-            all_data_points(
-                table_points(frames["cells"]),
-                kv_points(frames["kvs"]),
-                text_fact_points(
-                    frames["lines"].select(
-                        "doc_id", F.col("line_no").alias("offset"), "text"
-                    )
-                ),
-            )
-        )
-        w = Window.partitionBy("doc_id").orderBy("src_rank", "offset", "seq")
-        pts = pts.withColumn("point_id", (F.row_number().over(w) - 1).cast("int"))
-        com = lexical_commentary(
-            pts.select("doc_id", "point_id", "field", "value"), frames["lines"]
-        )
-        return pts.join(com, ["doc_id", "point_id"], "left")
-
-    def unified_points():
-        frames = extract_frames(interleave_flat_documents(docs_flat))
-        pts = dedup_first_wins(
-            all_data_points(
-                table_points(frames["cells"]),
-                kv_points(frames["kvs"]),
-                text_fact_points(
-                    frames["lines"].select(
-                        "doc_id", F.col("line_no").alias("offset"), "text"
-                    )
-                ),
-                footnote_points(frames["footnotes"]),
-            )
-        )
-        w = Window.partitionBy("doc_id").orderBy(
-            "src_rank", "offset", "seq", "field", "value"
-        )
-        pts = pts.withColumn("point_id", (F.row_number().over(w) - 1).cast("int"))
-        com = lexical_commentary(
-            pts.select("doc_id", "point_id", "field", "value"), frames["lines"]
-        )
-        enriched = pts.join(
-            com.withColumnRenamed("line_no", "matched_line"),
-            ["doc_id", "point_id"],
-            "left",
-        )
-        general = general_commentary_points(
-            unmatched_paragraphs(frames["lines"], com.select("doc_id", "line_no"))
-        )
-        return enriched.select(
-            "doc_id", "source", "type", "field", "value", "page"
-        ).unionByName(
-            general.select("doc_id", "source", "type", "field", "value", "page")
-        )
-
-    qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-
-    skew_path = synth_path + ".onefile"
-    if not os.path.exists(skew_path):
-        import pyarrow.parquet as pq
-
-        tabs = pq.read_table(synth_path)
-        pq.write_table(tabs, skew_path)
-
-    eq = entry.queries()
-    return {
-        "extract_synth": lambda: extract_spans(synth),
-        "extract_skew_salted": lambda: extract_spans(
-            spark.read.parquet(skew_path), salt=True
-        ),
-        "extract_testdata": lambda: extract_spans(
-            interleave_flat_documents(docs_flat)
-        ),
-        "structure_points": structure_points,
-        "unified_points": unified_points,
-        "pricing_summary": lambda: eq["q13_pricing_summary"](spark, sf_dir),
-        "minhash_pairs": lambda: minhash_near_dups(docs_str, n=3, threshold=0.5),
-        "simhash": lambda: simhash_signatures(docs_str),
-        "ann_topk": lambda: cosine_topk(emb, qvec, k=10),
-        "token_stats": lambda: (
-            token_count(docs_str)
-            .join(quality_score(docs_str), "doc_id")
-            .join(lang_id(docs_str), "doc_id")
-        ),
-        "dup_clusters": lambda: eq["q52_dup_clusters"](spark, sf_dir),
-        "bm25": lambda: eq["q53_bm25"](spark, sf_dir),
-        "asof_join": lambda: eq["q58_asof_join"](spark, sf_dir),
-        "range_join": lambda: eq["q59_range_join"](spark, sf_dir),
-        "incremental_dups": lambda: eq["q55_incremental_dups"](spark, sf_dir),
-        "quality_gate": lambda: eq["q61_quality_gate"](spark, sf_dir),
-        "dup_spans": lambda: eq["q62_dup_spans"](spark, sf_dir),
-        "lm_score": lambda: eq["q63_lm_score"](spark, sf_dir),
-        "containment": lambda: eq["q64_containment"](spark, sf_dir),
-        "mask_spans": lambda: eq["q65_mask_spans"](spark, sf_dir),
-        "knn_join": lambda: knn_join(
-            emb.select("vec_id", "embedding"), k=5, n_cells=16, n_probe=2, iters=3
-        ),
-        "semantic_dedup": lambda: semantic_dedup(
-            emb.select("vec_id", "embedding"),
-            threshold=0.35, k=3, n_cells=16, iters=3,
-        ),
-        "cdc_dedup": lambda: eq["q71_cdc_dedup"](spark, sf_dir),
-        "bpe_encode": lambda: bpe_encode(docs_str, bpe_merges),
-        "html_extract": lambda: eq["q72_html_extract"](spark, sf_dir),
-        "dsir_weights": lambda: eq["q73_dsir_weights"](spark, sf_dir),
-        "sq8_topk": lambda: eq["q75_sq8_topk"](spark, sf_dir),
-    }
+def capture(closure):
+    """The DataFrame a ``bench.build_queries`` closure materializes, taken
+    lazily: ``bench._materialize`` is swapped for a recorder while the
+    closure runs, so plan dumps cannot drift from what the bench times."""
+    got = []
+    real = bench._materialize
+    bench._materialize = got.append
+    try:
+        closure()
+    finally:
+        bench._materialize = real
+    (df,) = got
+    return df
 
 
 def main() -> None:
@@ -198,13 +60,13 @@ def main() -> None:
     from pdftableextractor_spark.session import build_session
 
     spark = build_session(app_name="bench-extra", master=f"local[{cpus}]")
-    dfs = build_dfs(spark, sf_dir, synth_path)
+    queries = bench.build_queries(spark, sf_dir, synth_path)
 
     if args.plans:
         os.makedirs(args.out, exist_ok=True)
-        names = args.only or list(dfs)
+        names = args.only or list(queries)
         for name in names:
-            df = dfs[name]()
+            df = capture(queries[name])
             path = os.path.join(args.out, f"{name}{args.suffix}.txt")
             with open(path, "w") as f:
                 f.write(df._sc._jvm.PythonSQLUtils.explainString(
@@ -212,7 +74,7 @@ def main() -> None:
                 ))
             print("wrote", path)
 
-    names = list(dfs) if args.time_all else (args.time or [])
+    names = list(queries) if args.time_all else (args.time or [])
     if names:
         cal_pre = host_calibration()
         timings: dict[str, list[float]] = {}
@@ -221,7 +83,7 @@ def main() -> None:
             ts = []
             for _ in range(args.runs):
                 t0 = time.time()
-                _materialize(dfs[name]())
+                queries[name]()
                 ts.append(round(time.time() - t0, 3))
             timings[name] = ts
             spark.sparkContext.setJobDescription(None)

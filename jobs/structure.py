@@ -37,25 +37,12 @@ def main() -> None:
     p.add_argument("--gen-docs", type=int, default=None)
     p.add_argument("--master", default=None)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument(
-        "--stage",
-        action="store_true",
-        help="materialize extraction frames to parquet once before "
-        "structuring (wins when the upstream is expensive: pdf-kernel-heavy "
-        "corpora or remote scans; measured SLOWER on this synthetic mix — "
-        "63.9s vs 36.2s at 2000 docs — because the relational branches are "
-        "cheap codegen and the parquet round-trip costs more than the "
-        "recompute)",
-    )
     args = p.parse_args()
 
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.corpus import write_corpus_parquet
-    from pdftableextractor_spark.operators.extract import (
-        extract_frames,
-        stage_frames,
-    )
+    from pdftableextractor_spark.operators.extract import extract_frames
     from pdftableextractor_spark.operators.structure import (
         unified_data_points,
     )
@@ -70,14 +57,7 @@ def main() -> None:
 
     t0 = time.time()
     docs = read_path(spark, inp)
-    # --stage extracts once and reads the four frames back from parquet;
-    # the default lazy path re-runs scan+explode+kernel per frame consumer
-    # (6x fan-out) — cheaper HERE because those stages are codegen-fast,
-    # but the wrong trade when the upstream scan/kernel dominates
-    if args.stage:
-        frames = stage_frames(docs, args.output.rstrip("/") + ".__stage__")
-    else:
-        frames = extract_frames(docs)
+    frames = extract_frames(docs)
     # commentary salting pays only on heavy-tailed corpora (quadratic
     # per-doc pair work concentrates in a few giant docs); detect the tail
     # from span counts — one narrow scan — and leave it off for uniform

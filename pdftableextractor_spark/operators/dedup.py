@@ -386,7 +386,14 @@ def simhash_near_dups(
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Blocking on the
     top ``block_bits`` bits bounds the join (at 100 TB the block prefix is
-    the shuffle key; rotate prefixes for full recall — here one rotation)."""
+    the shuffle key; rotate prefixes for full recall — here one rotation).
+
+    EAGER: the signature frame is ``localCheckpoint(eager=True)``-ed at call
+    time, so calling this runs the tokenize + signature scan even if the
+    result is never consumed. Trade: the scan runs once instead of once per
+    join side, but lineage is truncated to executor-local blocks — losing an
+    executor fails the query instead of recomputing (the FAULT-TOLERANCE
+    TRADE note at ``containment_pairs``)."""
     # both sides of the block self-join read the signature lineage (the
     # tokenize + 60-vote scan); checkpoint the slim sig rows so it runs
     # once (round-7 — the minhash_near_dups pattern)
@@ -478,7 +485,16 @@ def hamming_near_dup_pairs(
     is only meaningful between real hashes — and (b) pseudo-pseudo at
     hamming == 0 — byte-identical payloads still dedup exactly, but a
     pseudo-hash can never claim NEAR-similarity, and real/pseudo never
-    mix (they live in different hash spaces)."""
+    mix (they live in different hash spaces).
+
+    EAGER: ``sigs`` is ``localCheckpoint(eager=True)``-ed at call time, so
+    calling this runs the signature lineage (for the perceptual callers,
+    every media decode) even if the result is never consumed, and a caller
+    that already checkpointed ``sigs`` pays a second, redundant one. Trade:
+    the lineage runs once instead of once per join side, but it is
+    truncated to executor-local blocks — losing an executor fails the query
+    instead of recomputing (the FAULT-TOLERANCE TRADE note at
+    ``containment_pairs``)."""
     if bits % n_bands:
         raise ValueError(f"n_bands={n_bands} must divide bits={bits}")
     band_bits = bits // n_bands
@@ -669,32 +685,6 @@ def ngram_decontaminate(
         .distinct()
     )
     return docs.join(contaminated, "doc_id", "left_anti")
-
-
-def cosine_col(a, b):
-    """Cosine similarity of two array<float/double> columns, JVM-side.
-
-    NOTE: higher-order-function lambdas are interpreted per element — fine
-    for one-off small arrays, wrong for embedding-scale scans. Hot paths
-    (similarity search, embedding_near_dups) use the Arrow-batched numpy
-    kernels in kernels/vectors.py instead; this stays for expression
-    contexts where a Python UDF can't go."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    return dot / (na * nb)
 
 
 def embedding_near_dups(

@@ -3,9 +3,8 @@
 Pipeline (one job, ONE shuffle):
 
     documents(doc_id, spans)
-      → posexplode(spans)                       [narrow]
-      → per-kind branches                       [narrow, all JVM-side except
-                                                 the pdf layout kernel]
+      → explode(spans)                          [narrow]
+      → _emit_rows: one per-kind CASE per span  [narrow, JVM-side codegen]
           text   : normalize → drop boiler/footnote/empty
           boiler : dropped
           media  : pass through untouched
@@ -14,22 +13,25 @@ Pipeline (one job, ONE shuffle):
                    semantics: max-extent + '' fill)
           kv     : 'key\\x1fvalue' → 'key: value', empty keys dropped
                    (textract_processor.py:319-344)
-          pdf    : mapInPandas layout kernel → raw text lines + table cells,
-                   then text lines rejoin the shared normalize/filter path
-      → unionByName                             [narrow]
+      ∪ pdf spans: mapInPandas layout kernel → raw text lines + table cells,
+                   then the same normalize/keep rule (_pdf_filtered)
       → row_number() over (doc_id ORDER BY offset, sub_idx) - 1 AS order
                                                 [THE shuffle: hash by doc_id]
+
+``extract_spans`` runs that pipeline; ``extract_frames`` builds the
+structuring stage's frames from the same ``_emit_rows`` over kind-filtered
+slices of the exploded spans, so the per-kind rules exist once.
 
 Scale notes (100 TB design):
 - All heavy per-span work happens *before* the shuffle at span/page
   granularity, so a 500-page document is 500 parallel units, not one task —
   the skew case is solved structurally, not just by AQE (which stays on as a
   backstop for the final window's skewed doc groups).
-- Every branch filter/projection is expressed declaratively → Catalyst pushes
-  `spans IS NOT NULL`-style predicates into the scan and prunes to the two
+- Every filter/projection is expressed declaratively → Catalyst pushes
+  `spans IS NOT NULL`-style predicates into the scan and prunes to the
   read columns.
 - The only Python in the plan is the Arrow-batched pdf layout kernel; the
-  text/table/kv branches are whole-stage-codegen expressions.
+  per-kind emission is whole-stage-codegen expressions.
 """
 
 from __future__ import annotations
@@ -81,25 +83,6 @@ def explode_spans(documents: DataFrame) -> DataFrame:
             F.col("span.kind").alias("kind"),
             F.col("span.text").alias("text"),
             F.col("span.media_ref").alias("media_ref"),
-        )
-    )
-
-
-def _text_branch(spans: DataFrame) -> DataFrame:
-    """Shared normalize/filter path for content lines (kind='text' spans and
-    raw lines emitted by the pdf layout kernel)."""
-    return (
-        spans.filter(~is_boilerplate_col(F.col("text")))
-        .filter(~is_footnote_col(F.col("text")))
-        .withColumn("text", normalize_text_col(F.col("text")))
-        .filter(F.col("text") != "")
-        .select(
-            "doc_id",
-            "offset",
-            "sub_idx",
-            F.lit("text").alias("kind"),
-            "text",
-            F.lit("").alias("media_ref"),
         )
     )
 
@@ -172,83 +155,26 @@ def _ws_norm(col):
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def _table_branch(spans: DataFrame) -> DataFrame:
-    """Serialized grids → dense row-major cells with (row_idx, col_idx).
-
-    Pure higher-order SQL functions, span-local (no shuffle). Used by
-    ``extract_frames``; ``extract_spans`` inlines the same _cells/_grid
-    builders into its single-pass CASE plan."""
-    spans.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    parsed = spans.select(
-        "doc_id", "offset", _cells_col(F.col("text")).alias("cells")
-    ).filter(F.size("cells") > 0)
-    grid = parsed.select("doc_id", "offset", *_grid_extent_cols())
-    dense = grid.select("doc_id", "offset", "max_c", _dense_grid_col())
-    # posexplode_outer on purpose: plain posexplode makes Catalyst push its
-    # implicit `size(grid) > 0` predicate below the repartition Exchange with
-    # the WHOLE dense-grid expression inlined into the filter — the cell map
-    # is then rebuilt per grid cell per row (observed 20x slowdown). The
-    # outer variant generates no such predicate; null cells are filtered
-    # right after instead.
-    return dense.select(
-        "doc_id",
-        "offset",
-        "max_c",
-        F.posexplode_outer("grid").alias("sub_idx", "cell"),
-    ).filter(F.col("cell").isNotNull()).select(
-        "doc_id",
-        "offset",
-        F.col("sub_idx").cast("int").alias("sub_idx"),
-        F.floor(F.col("sub_idx") / (F.col("max_c") + 1))
-        .cast("int")
-        .alias("row_idx"),
-        (F.col("sub_idx") % (F.col("max_c") + 1)).cast("int").alias("col_idx"),
-        F.lit("table_cell").alias("kind"),
-        _ws_norm(F.col("cell")).alias("text"),
-        F.lit("").alias("media_ref"),
-    )
-
-
-def _kv_branch(spans: DataFrame) -> DataFrame:
-    parts = F.split(F.col("text"), US, 2)
-    return (
-        spans.select(
-            "doc_id",
-            "offset",
-            F.trim(F.get(parts, 0)).alias("k"),
-            F.trim(F.coalesce(F.get(parts, 1), F.lit(""))).alias("v"),
-        )
-        .filter(F.col("k") != "")
-        .select(
-            "doc_id",
-            "offset",
-            F.lit(0).cast("int").alias("sub_idx"),
-            F.lit("kv").alias("kind"),
-            F.concat_ws(": ", F.col("k"), F.col("v")).alias("text"),
-            F.lit("").alias("media_ref"),
-        )
-    )
+def _keep_text_col(text_col):
+    """The content-line keep rule: neither boilerplate nor a footnote
+    (evaluated on the raw, un-normalized line)."""
+    return ~is_boilerplate_col(text_col) & ~is_footnote_col(text_col)
 
 
 def _pdf_expanded(spans: DataFrame) -> DataFrame:
     """Raw layout-kernel output (doc_id, offset, sub_idx, kind, text,
     media_ref) — text lines UNFILTERED and UNNORMALIZED. Shared by the
-    extraction branch (which normalizes + filters) and the footnote frame
+    extraction path (which normalizes + filters) and the footnote frame
     (which classifies the raw line, textract_processor.py:98-160 semantics)."""
     return spans.select("doc_id", "offset", "text").mapInPandas(
         pdf_layout_kernel, schema=KERNEL_OUT_SCHEMA
     )
 
 
-def _pdf_branch(spans: DataFrame) -> DataFrame:
-    """Layout-kernel expansion + the shared text filters, in ONE pass (a
+def _pdf_filtered(expanded: DataFrame) -> DataFrame:
+    """The normalize/keep projection over raw kernel output, in ONE pass (a
     union of two filters over the kernel output would run the Python kernel
     twice)."""
-    return _pdf_filtered(_pdf_expanded(spans))
-
-
-def _pdf_filtered(expanded: DataFrame) -> DataFrame:
-    """The normalize/keep projection over raw kernel output."""
     staged = expanded.select(
         "doc_id",
         "offset",
@@ -258,15 +184,11 @@ def _pdf_filtered(expanded: DataFrame) -> DataFrame:
         F.when(
             F.col("kind") == "text", normalize_text_col(F.col("text"))
         )
-        .otherwise(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
+        .otherwise(_ws_norm(F.col("text")))
         .alias("text"),
-        (
-            (F.col("kind") != "text")
-            | (
-                ~is_boilerplate_col(F.col("text"))
-                & ~is_footnote_col(F.col("text"))
-            )
-        ).alias("keep"),
+        ((F.col("kind") != "text") | _keep_text_col(F.col("text"))).alias(
+            "keep"
+        ),
     )
     return staged.filter(
         F.col("keep") & ((F.col("kind") != "text") | (F.col("text") != ""))
@@ -285,80 +207,45 @@ def _emit(sub, kind, text, media):
     )
 
 
-def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
-    """documents(doc_id, spans) → spans_out(doc_id, order, kind, text,
-    media_ref), the driver-checked span sequence (FIXTURES.md §2).
+def _emit_rows(*slices: DataFrame) -> list[DataFrame]:
+    """Exploded non-pdf spans → output rows (doc_id, offset, sub_idx, kind,
+    text, media_ref, max_c), one frame per input slice: the per-kind rules,
+    written once. One span-local pass (no shuffle) emits an array of output
+    structs per span through a per-kind CASE, then explodes it. ``max_c`` is
+    the table's grid width - 1 (null for other kinds), so a table cell's
+    row/col is sub_idx div/mod (max_c + 1); callers that do not read it get
+    it pruned before the generator.
 
-    Single-pass design: one scan handles every span kind except 'pdf' via a
-    per-kind CASE that emits an array of output structs (a per-branch union
-    would scan the input once per kind — 6x the IO at the 100 TB design
-    point). The pdf layout kernel is the one extra scan (mapInPandas can't
-    share a projection with relational branches).
-
-    ``salt=True`` inserts the explicit salted repartition after the explode
-    (plans/skew.py): heavy documents and fat input splits spread across the
-    cluster before any kernel work. Measured: on a single-fat-file input it
-    is a 5x win (the scan stage otherwise serializes); on a well-laid-out
-    many-file input it costs one extra all-to-all of raw span text and
-    *hurts* scaling efficiency (0.86 -> 0.58 at 4-vs-16 cores). Default off;
-    turn on for skewed layouts (few giant files, multi-hundred-page docs
-    concentrated in few splits).
-    """
-    from pdftableextractor_spark.plans.skew import salted_repartition
-
+    The column expressions are built once and shared by every slice:
+    building them is ~2,400 py4j round trips, and building them per slice
+    took extract_frames' construction from 1.5 s to 2.5 s (100 docs,
+    4-vCPU host)."""
     # duplicate (r,c) cells take the LAST value, like the reference's
     # table_structure[row][col] assignment (textract_processor.py:287).
     # NOTE: this mutates the SESSION conf (map-key policy is evaluated at
     # execution, so it cannot be scoped to this plan). build_session already
     # sets it; this covers foreign sessions. If your session needs EXCEPTION
     # semantics elsewhere, run extraction in its own session.
-    documents.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    slices[0].sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
 
-    s = explode_spans(documents)
-    if salt:
-        s = salted_repartition(s, "doc_id", "offset")
-
-    # --- stage 1: parse table cells (null for other kinds) ---------------
-    st1 = s.filter(F.col("kind") != "pdf").select(
-        "doc_id",
-        "offset",
-        "kind",
-        "text",
-        "media_ref",
-        F.when(F.col("kind") == "table", _cells_col(F.col("text"))).alias(
-            "cells"
-        ),
+    # stage 1: parse table cells (null for other kinds)
+    cells = F.when(F.col("kind") == "table", _cells_col(F.col("text"))).alias(
+        "cells"
     )
-
-    # --- stage 2: grid extent + cell map (separate Project: 'cells' is
-    # referenced three times and must not be inlined) ----------------------
-    st2 = st1.select(
-        "doc_id", "offset", "kind", "text", "media_ref", *_grid_extent_cols()
-    )
-
-    # --- stage 3: dense row-major grid ------------------------------------
-    st3 = st2.select(
-        "doc_id", "offset", "kind", "text", "media_ref", _dense_grid_col()
-    )
-
-    # --- stage 4: normalized text + kv parts -------------------------------
+    # stage 2: grid extent + cell map (separate Project: 'cells' is
+    # referenced three times and must not be inlined)
+    extent = _grid_extent_cols()
+    # stage 3: dense row-major grid
+    grid = _dense_grid_col()
+    # stage 4: normalized text + kv parts
     kv_parts = F.split(F.col("text"), US, 2)
-    st4 = st3.select(
-        "doc_id",
-        "offset",
-        "kind",
-        "media_ref",
-        "grid",
+    parts = [
         normalize_text_col(F.col("text")).alias("norm"),
-        (
-            ~is_boilerplate_col(F.col("text"))
-            & ~is_footnote_col(F.col("text"))
-        ).alias("keep_text"),
+        _keep_text_col(F.col("text")).alias("keep_text"),
         F.trim(F.get(kv_parts, 0)).alias("kv_k"),
         F.trim(F.coalesce(F.get(kv_parts, 1), F.lit(""))).alias("kv_v"),
-    )
-
-    # --- stage 5: per-kind emission ----------------------------------------
+    ]
+    # stage 5: per-kind emission
     empty = F.array().cast(EMIT_T)
     emits = (
         F.when(
@@ -403,25 +290,63 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
             ).otherwise(empty),
         )
         .otherwise(empty)  # 'boiler' and unknown kinds
-    )
-    rows = (
-        st4.select("doc_id", "offset", emits.alias("emits"))
-        .select("doc_id", "offset", F.explode_outer("emits").alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select(
-            "doc_id",
-            "offset",
-            F.col("e.sub_idx").alias("sub_idx"),
-            F.col("e.kind").alias("kind"),
-            F.col("e.text").alias("text"),
-            F.col("e.media_ref").alias("media_ref"),
-        )
-    )
+    ).alias("emits")
 
-    pdf = _pdf_branch(s.filter(F.col("kind") == "pdf"))
-    unioned = rows.unionByName(pdf)
+    def emit(spans: DataFrame) -> DataFrame:
+        keys = ["doc_id", "offset", "kind"]
+        return (
+            spans.select(*keys, "text", "media_ref", cells)
+            .select(*keys, "text", "media_ref", *extent)
+            .select(*keys, "text", "media_ref", "max_c", grid)
+            .select(*keys, "media_ref", "max_c", "grid", *parts)
+            .select("doc_id", "offset", "max_c", emits)
+            .select(
+                "doc_id", "offset", "max_c", F.explode_outer("emits").alias("e")
+            )
+            .filter(F.col("e").isNotNull())
+            .select(
+                "doc_id",
+                "offset",
+                F.col("e.sub_idx").alias("sub_idx"),
+                F.col("e.kind").alias("kind"),
+                F.col("e.text").alias("text"),
+                F.col("e.media_ref").alias("media_ref"),
+                "max_c",
+            )
+        )
+
+    return [emit(spans) for spans in slices]
+
+
+def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
+    """documents(doc_id, spans) → spans_out(doc_id, order, kind, text,
+    media_ref), the driver-checked span sequence (FIXTURES.md §2).
+
+    Single-pass design: one scan handles every span kind except 'pdf' via
+    ``_emit_rows``'s per-kind CASE (a per-branch union would scan the input
+    once per kind — 6x the IO at the 100 TB design point). The pdf layout
+    kernel is the one extra scan (mapInPandas can't share a projection with
+    relational branches).
+
+    ``salt=True`` inserts the explicit salted repartition after the explode
+    (plans/skew.py): heavy documents and fat input splits spread across the
+    cluster before any kernel work. Measured: on a single-fat-file input it
+    is a 5x win (the scan stage otherwise serializes); on a well-laid-out
+    many-file input it costs one extra all-to-all of raw span text and
+    *hurts* scaling efficiency (0.86 -> 0.58 at 4-vs-16 cores). Default off;
+    turn on for skewed layouts (few giant files, multi-hundred-page docs
+    concentrated in few splits).
+    """
+    from pdftableextractor_spark.plans.skew import salted_repartition
+
+    s = explode_spans(documents)
+    if salt:
+        s = salted_repartition(s, "doc_id", "offset")
+
+    (rows,) = _emit_rows(s.filter(F.col("kind") != "pdf"))
+    pdf = _pdf_filtered(_pdf_expanded(s.filter(F.col("kind") == "pdf")))
     w = Window.partitionBy("doc_id").orderBy("offset", "sub_idx")
-    return unioned.select(
+    return rows.drop("max_c").unionByName(pdf).select(
         "doc_id",
         (F.row_number().over(w) - 1).cast("int").alias("order"),
         "kind",
@@ -431,7 +356,9 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
 
 
 def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
-    """Structuring-stage inputs: the extraction's intermediate frames.
+    """Structuring-stage inputs: the extraction's intermediate frames, built
+    by the same per-kind emitter as ``extract_spans`` (``_emit_rows``), each
+    over its kind's slice of the exploded spans.
 
     Returns
       lines: (doc_id, line_no, text)   — normalized content lines in reading
@@ -448,56 +375,59 @@ def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
              so line_no matches the reference's footnote `line_number` even
              though those lines never reach the filtered `lines` frame.
 
-    Materialization (round-7): consumers reference the frames SIX times in
-    one plan (cells, kvs, lines ×3, footnotes) and exchange reuse never
-    fires across the differently-pruned subtrees — the unified-points plan
+    Materialization: consumers reference the frames SIX times in one plan
+    (cells, kvs, lines ×3, footnotes) and exchange reuse never fires across
+    the differently-pruned subtrees — without a cut, the unified-points plan
     ran the scan+explode 7× and the pdf layout kernel 7× (36 parquet scans,
     plans/r07/unified_points_before.txt). The exploded spans and the raw
-    kernel output are localCheckpointed here (the containment_pairs
-    pattern: blocks released by the ContextCleaner, not pinned; see the
-    FAULT-TOLERANCE TRADE note there), so extraction runs once per call no
-    matter how many frames the consumer wires together. ``stage_frames``
-    remains the cross-job parquet variant.
+    kernel output are therefore localCheckpointed EAGERLY, at call time
+    (blocks released by the ContextCleaner, not pinned; see the
+    FAULT-TOLERANCE TRADE note at dedup.containment_pairs: losing an
+    executor fails the query instead of recomputing), so extraction runs
+    once per call no matter how many frames the consumer wires together.
     """
     s = explode_spans(documents).localCheckpoint(eager=True)
     pdf_raw = _pdf_expanded(
         s.filter(F.col("kind") == "pdf")
     ).localCheckpoint(eager=True)
-    return _frames_from(s, pdf_raw)
 
+    def of_kind(kind: str) -> DataFrame:
+        # kind as a literal: the optimizer folds the emitter's CASE down to
+        # this kind's branch and prunes the other kinds' columns, so each
+        # frame does only its own kind's work
+        return s.filter(F.col("kind") == kind).withColumn("kind", F.lit(kind))
 
-def _frames_from(s: DataFrame, pdf_raw: DataFrame) -> dict[str, DataFrame]:
-    """Frames from an exploded-span frame + raw pdf-kernel output — split
-    out so ``stage_frames`` can persist the two expensive inputs and build
-    every frame from ONE extraction pass."""
-    zero = F.lit(0).cast("int").alias("sub_idx")
-    text = _text_branch(
-        s.filter(F.col("kind") == "text").select("doc_id", "offset", zero, "text")
+    text_rows, table_rows, kv_rows = _emit_rows(
+        of_kind("text"), of_kind("table"), of_kind("kv")
     )
-    pdf_text = _pdf_filtered(pdf_raw).filter(F.col("kind") == "text")
     w = Window.partitionBy("doc_id").orderBy("offset", "sub_idx")
+    pdf_text = _pdf_filtered(pdf_raw).filter(F.col("kind") == "text")
     lines = (
-        text.unionByName(pdf_text)
+        text_rows.drop("max_c")
+        .unionByName(pdf_text)
         .select(
             "doc_id",
             (F.row_number().over(w) - 1).cast("int").alias("line_no"),
             "text",
         )
     )
-    cells = _table_branch(s.filter(F.col("kind") == "table")).select(
-        "doc_id", "offset", "row_idx", "col_idx", "text"
+    width = F.col("max_c") + 1
+    cells = table_rows.select(
+        "doc_id",
+        "offset",
+        F.floor(F.col("sub_idx") / width).cast("int").alias("row_idx"),
+        (F.col("sub_idx") % width).cast("int").alias("col_idx"),
+        "text",
     )
-    kvs = _kv_branch(s.filter(F.col("kind") == "kv")).select(
-        "doc_id", "offset", "text"
-    )
+    kvs = kv_rows.select("doc_id", "offset", "text")
 
     # raw candidate lines = text spans + pdf-kernel text lines, PRE-filter:
-    # footnotes are dropped by _text_branch, so classification must happen on
+    # footnotes are dropped from `lines`, so classification must happen on
     # this frame. Numbering covers every raw line (blank or not) to mirror
     # the reference's enumerate index.
     raw = (
-        s.filter(F.col("kind") == "text")
-        .select("doc_id", "offset", zero, "text")
+        of_kind("text")
+        .select("doc_id", "offset", F.lit(0).cast("int").alias("sub_idx"), "text")
         .unionByName(
             pdf_raw.filter(F.col("kind") == "text")
             .select("doc_id", "offset", "sub_idx", "text")
@@ -518,38 +448,3 @@ def _frames_from(s: DataFrame, pdf_raw: DataFrame) -> dict[str, DataFrame]:
         )
     )
     return {"lines": lines, "cells": cells, "kvs": kvs, "footnotes": footnotes}
-
-
-def stage_frames(documents: DataFrame, stage_dir: str) -> dict[str, DataFrame]:
-    """Extraction frames materialized ONCE to ``stage_dir`` parquet.
-
-    ``extract_frames`` returns lazy lineages — a consumer like the unified
-    structuring job references the frames six times (cells, kvs, lines ×3,
-    footnotes), and each action re-runs the scan + explode + pdf kernel. At
-    the 100 TB design point that is 6× the most expensive stage. Staging
-    runs extraction once (the exploded spans and raw kernel output are
-    persisted spill-to-disk for the duration of the four frame writes,
-    then released) and returns parquet-backed frames; downstream shuffles
-    then start from columnar storage, and the staged frames double as
-    resume points.
-    """
-    from pyspark import StorageLevel
-
-    s = explode_spans(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    pdf_raw = _pdf_expanded(s.filter(F.col("kind") == "pdf")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    frames = _frames_from(s, pdf_raw)
-    spark = documents.sparkSession
-    from pdftableextractor_spark.sources.tables import read_path, write_table
-
-    out: dict[str, DataFrame] = {}
-    try:
-        for name, df in frames.items():
-            path = f"{stage_dir.rstrip('/')}/{name}"
-            write_table(df, path, mode="overwrite")
-            out[name] = read_path(spark, path)
-    finally:
-        s.unpersist()
-        pdf_raw.unpersist()
-    return out

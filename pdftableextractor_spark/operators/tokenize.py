@@ -203,9 +203,3 @@ def bpe_encode(
         _encode_kernel(list(map(tuple, merges)), text_col),
         schema=ENCODE_SCHEMA,
     )
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The token inventory implied by a merge table (merged symbols in
-    training order; base characters come from data at encode time)."""
-    return [a + b for a, b in merges]

@@ -2,8 +2,7 @@
 
 Parquet in the sandbox; the same entry points take ``format='iceberg'`` on a
 cluster with the Iceberg runtime — the engine never assumes anything beyond
-``spark.read.format(...).load(...)``. Binary ingestion of raw PDFs maps to
-``spark.read.format('binaryFile')`` (S1/S2).
+``spark.read.format(...).load(...)``.
 """
 
 from __future__ import annotations
@@ -66,15 +65,3 @@ def read_documents(
 ) -> DataFrame:
     """The interleaved documents corpus (doc_id, spans)."""
     return read_path(spark, path, fmt)
-
-
-def read_pdf_binaries(spark: SparkSession, path: str) -> DataFrame:
-    """Raw PDF ingestion (S1/S2 analog): binaryFile source → (path, content).
-    Downstream, a parser kernel turns content bytes into word-box pages; in
-    this sandbox the corpus generator plays that role."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select("path", "length", "content")
-    )

@@ -1,10 +1,18 @@
 """Pre-flight for the driver's CORRECTNESS gate: run every queries() entry
 and its oracle_sql() DuckDB twin at sf0.001, compare row count, column names,
-and order-insensitive values (the driver does the same at sf0.01)."""
+and order-insensitive values (the driver does the same at sf0.01).
+
+The testdata directory is read from SPARK_GRAFT_SF_DIR (default: sf0.001);
+the same check at the sf0.01 correctness scale is
+
+    SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 \\
+        python -m pytest tests/test_driver_oracles.py -q -p no:cacheprovider
+"""
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -12,6 +20,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

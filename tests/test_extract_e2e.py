@@ -154,19 +154,71 @@ def test_hostile_grid_area_is_bounded(spark):
     assert got == [(0, "text", "still here.")]
 
 
-def test_stage_frames_equals_lazy_frames(spark, tmp_path):
-    """stage_frames materializes extraction once; every frame must be
-    byte-identical to the lazy extract_frames lineage."""
+def test_extract_frames_agrees_with_extract_spans(spark):
+    """extract_frames and extract_spans share one per-kind emitter: per doc,
+    the lines / kvs / cells frames equal the matching extract_spans rows —
+    including a hostile-area table, an empty-key kv and a null-text span."""
+    from collections import defaultdict
+
+    from pyspark.sql import functions as F
+
     from pdftableextractor_spark.corpus import gen_documents
-    from pdftableextractor_spark.operators.extract import (
-        extract_frames,
-        stage_frames,
+    from pdftableextractor_spark.operators.extract import extract_frames
+    from pdftableextractor_spark.types import US
+
+    def span(kind, text, offset):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": offset}
+
+    docs = gen_documents(25, seed=7) + [
+        {"doc_id": "hostile_grid", "spans": [
+            span("table", US.join(["r0c0:A", "r9999c9999:x"]), 0),
+            span("table", US.join(["r0c0:k", "r0c1:v", "r1c1:$5"]), 1),
+            span("text", "After the tables.", 2),
+        ]},
+        {"doc_id": "empty_key_kv", "spans": [
+            span("kv", US.join(["", "orphan"]), 0),
+            span("kv", US.join(["Region", "EMEA"]), 1),
+        ]},
+        {"doc_id": "null_text", "spans": [
+            span("text", None, 0),
+            span("text", "Kept line.", 1),
+        ]},
+    ]
+    sdf = spark.createDataFrame(
+        docs,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    frames = extract_frames(sdf)
+    spans = extract_spans(sdf)
+    # pdf-derived cells are flat-only (absent from the cells frame)
+    non_pdf = extract_spans(
+        sdf.select("doc_id", F.filter("spans", lambda s: s["kind"] != "pdf")
+                   .alias("spans"))
     )
 
-    sdf = spark.createDataFrame(gen_documents(25, seed=7))
-    lazy = extract_frames(sdf)
-    staged = stage_frames(sdf, str(tmp_path / "stage"))
-    for name in ("lines", "cells", "kvs", "footnotes"):
-        a = sorted(tuple(r) for r in lazy[name].collect())
-        b = sorted(tuple(r) for r in staged[name].collect())
-        assert a == b, name
+    def per_doc(df, *order):
+        out = defaultdict(list)
+        for r in df.orderBy("doc_id", *order).collect():
+            out[r["doc_id"]].append(r["text"])
+        return dict(out)
+
+    def kind(df, k):
+        return per_doc(df.filter(F.col("kind") == k), "order")
+
+    lines = per_doc(frames["lines"], "line_no")
+    kvs = per_doc(frames["kvs"], "offset")
+    cells = per_doc(frames["cells"], "offset", "row_idx", "col_idx")
+    assert lines == kind(spans, "text")
+    assert kvs == kind(spans, "kv")
+    assert cells == kind(non_pdf, "table_cell")
+
+    assert cells["hostile_grid"] == ["k", "v", "", "$5"]
+    assert kvs["empty_key_kv"] == ["Region: EMEA"]
+    assert lines["null_text"] == ["Kept line."]
+    coords = [
+        (r["offset"], r["row_idx"], r["col_idx"])
+        for r in frames["cells"].filter(F.col("doc_id") == "hostile_grid")
+        .orderBy("offset", "row_idx", "col_idx").collect()
+    ]
+    assert coords == [(1, 0, 0), (1, 0, 1), (1, 1, 0), (1, 1, 1)]
