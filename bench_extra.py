@@ -3,7 +3,11 @@
 NOT part of the frozen measurement contract (bench.py is the driver's
 artifact). This file exists so the optimization round can:
 
-  * dump `.explain("formatted")` for every bench query  → plans/r07/
+  * dump `.explain("formatted")` for every bench query  → plans/r07/,
+    followed by one `## localCheckpoint k` section per materialization
+    the query runs while it is built (the plan each checkpoint cuts off,
+    which `explain()` of the checkpointed frame shows only as
+    `Scan ExistingRDD`)
   * time any subset of queries in isolation with the noop sink, with
     host-calibration brackets, without paying the full 27-query sweep
 
@@ -20,23 +24,41 @@ import json
 import os
 import time
 
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
 import bench
 from bench import _synth_corpus_path, host_calibration
 
 
+def formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def capture(closure):
     """The DataFrame a ``bench.build_queries`` closure materializes, taken
-    lazily: ``bench._materialize`` is swapped for a recorder while the
+    lazily, plus the formatted plan of every ``localCheckpoint`` the
+    closure runs, in call order. ``bench._materialize`` and
+    ``DataFrame.localCheckpoint`` are swapped for recorders while the
     closure runs, so plan dumps cannot drift from what the bench times."""
-    got = []
+    got, cut = [], []
     real = bench._materialize
+    real_cp = ClassicDataFrame.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        cut.append(formatted_plan(self))
+        return real_cp(self, *args, **kwargs)
+
     bench._materialize = got.append
+    ClassicDataFrame.localCheckpoint = recording_checkpoint
     try:
         closure()
     finally:
         bench._materialize = real
+        ClassicDataFrame.localCheckpoint = real_cp
     (df,) = got
-    return df
+    return df, cut
 
 
 def main() -> None:
@@ -66,12 +88,12 @@ def main() -> None:
         os.makedirs(args.out, exist_ok=True)
         names = args.only or list(queries)
         for name in names:
-            df = capture(queries[name])
+            df, cut = capture(queries[name])
             path = os.path.join(args.out, f"{name}{args.suffix}.txt")
             with open(path, "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                ))
+                f.write(formatted_plan(df))
+                for k, plan in enumerate(cut, 1):
+                    f.write(f"\n## localCheckpoint {k}\n{plan}")
             print("wrote", path)
 
     names = list(queries) if args.time_all else (args.time or [])

@@ -13,9 +13,7 @@ One pass over documents(doc_id, text, ...):
                           components (large-star/small-star); keep the min
                           doc_id of each duplicate CLUSTER (transitive
                           closure — the industry-standard semantics; pairs
-                          (a,c),(b,c) collapse to one survivor, not two).
-                          --near-dup-mode pair restores the old per-pair
-                          drop-the-higher rule
+                          (a,c),(b,c) collapse to one survivor, not two)
   2b. semantic dedup      SemDeDup over --semantic-dedup embeddings
                           (vec_id == numeric doc_id): kNN graph at
                           --semantic-threshold -> connected components ->
@@ -146,13 +144,6 @@ def main() -> None:
         "path); 0 = probe every cell (exact)",
     )
     p.add_argument("--near-dup-threshold", type=float, default=0.5)
-    p.add_argument(
-        "--near-dup-mode",
-        choices=["cluster", "pair"],
-        default="cluster",
-        help="cluster = transitive-closure dedup (keep min of each "
-        "connected component); pair = drop doc_b of every pair",
-    )
     p.add_argument("--langs", default="en,und")
     p.add_argument("--max-rep", type=float, default=0.5)
     p.add_argument(
@@ -294,14 +285,11 @@ def main() -> None:
     pairs = minhash_near_dups(
         docs1, n=3, threshold=args.near_dup_threshold
     )
-    if args.near_dup_mode == "cluster":
-        losers = (
-            connected_components(pairs)
-            .filter(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("doc_id"))
-        )
-    else:
-        losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    losers = (
+        connected_components(pairs)
+        .filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("doc_id"))
+    )
     docs2 = docs1.join(losers, "doc_id", "left_anti").localCheckpoint()
     n2 = docs2.count()
 

@@ -21,6 +21,11 @@ Operators:
   minhash_near_dups_incremental  new batch vs standing corpus via the
                          persisted signature store (write/read_signature_store)
   embedding_near_dups    cosine near-dup pairs within a blocking key
+  collision_pairs        the one symmetric pair generator behind the
+                         near-dup family: self-join on a key, a < b, each
+                         side's payload attached; capped_containment_pairs
+                         builds the stop-key-capped containment path
+                         (video frames, CDC chunks) on it
 
 Scale notes (100 TB): every signature is computed scan-side with no shuffle;
 the only shuffles are the band-bucket join (keys are uniform md5 values →
@@ -235,19 +240,69 @@ def minhash_near_dups(
     # measured here and REVERTED — unlike the block-pair join, band rows
     # are slim and the verify dominates, so the salt's extra exchange +
     # probe-side replication lost 50% (interleaved A/B 2.35 vs 3.6 s)
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), "band_idx", "band_hash"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = collision_pairs(bands, ["band_idx", "band_hash"]).distinct()
     return verify_jaccard_pairs(cand, docs, text_col, n, threshold)
+
+
+def collision_pairs(
+    rows: DataFrame,
+    on,
+    id_col: str = "doc_id",
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    carry=(),
+) -> DataFrame:
+    """Every unordered pair of ``rows`` that collides on the ``on`` key
+    column(s): one self-join on ``on``, filtered to ``a_col < b_col`` ->
+    (``a_col``, ``b_col``, *carry_a, *carry_b), each ``carry`` column
+    attached from its own side with an ``_a`` / ``_b`` suffix. The one
+    candidate generator of the symmetric near-dup family (MinHash bands,
+    SimHash blocks, multiband Hamming, embedding blocks, capped
+    containment). A pair colliding on several keys appears once per key;
+    callers that verify per pair add ``.distinct()``. Quadratic only
+    within a key, so keys must be selective (band hashes, capped df)."""
+    on = [on] if isinstance(on, str) else list(on)
+    carry = list(carry)
+
+    def side(id_alias: str, sfx: str) -> DataFrame:
+        return rows.select(
+            F.col(id_col).alias(id_alias),
+            *[F.col(c).alias(f"{c}_{sfx}") for c in carry],
+            *on,
+        )
+
+    return (
+        side(a_col, "a")
+        .join(side(b_col, "b"), on)
+        .filter(F.col(a_col) < F.col(b_col))
+        .select(
+            a_col,
+            b_col,
+            *[f"{c}_a" for c in carry],
+            *[f"{c}_b" for c in carry],
+        )
+    )
+
+
+def _attach_ends(
+    pairs: DataFrame,
+    per_id: DataFrame,
+    cols,
+    id_col: str = "doc_id",
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+) -> DataFrame:
+    """``pairs`` with ``per_id``'s ``cols`` joined onto the ``a_col`` end,
+    then the ``b_col`` end, each column suffixed ``_a`` / ``_b``."""
+    for end, col in (("a", a_col), ("b", b_col)):
+        pairs = pairs.join(
+            per_id.select(
+                F.col(id_col).alias(col),
+                *[F.col(c).alias(f"{c}_{end}") for c in cols],
+            ),
+            col,
+        )
+    return pairs
 
 
 def band_rows_from_sigs(
@@ -326,13 +381,9 @@ def verify_jaccard_pairs(
         .agg(F.collect_set("s").alias("shingles"))
         .localCheckpoint(eager=True)
     )
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
-        "doc_b",
-    )
+    # the rename folds into the attach projection (no extra plan node) and
+    # keeps the sh_a / sh_b aliases, so the near_dup plan text is unchanged
+    pairs = _attach_ends(cand, sh.withColumnRenamed("shingles", "sh"), ["sh"])
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -401,18 +452,11 @@ def simhash_near_dups(
     blocked = sigs.withColumn(
         "block", F.shiftright(F.col("simhash"), SIMHASH_BITS - block_bits)
     )
-    a = blocked.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "block"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "block"
-    )
     return (
-        a.join(b, "block")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        collision_pairs(blocked, "block", carry=["simhash"])
         .withColumn(
             "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -522,40 +566,18 @@ def hamming_near_dup_pairs(
             )
         ).alias("bb"),
     ).select(*cols, F.col("bb.t").alias("t"), F.col("bb.band").alias("band"))
-    a = bands.select(
-        F.col(id_col).alias(a_col),
-        F.col(hash_col).alias("__ha"),
-        *([F.col(real_col).alias("__ra")] if real_col else []),
-        "t",
-        "band",
-    )
-    b = bands.select(
-        F.col(id_col).alias(b_col),
-        F.col(hash_col).alias("__hb"),
-        *([F.col(real_col).alias("__rb")] if real_col else []),
-        "t",
-        "band",
-    )
-    keep = [a_col, b_col, "__ha", "__hb"] + (
-        ["__ra", "__rb"] if real_col else []
-    )
-    cand = (
-        a.join(b, ["t", "band"])
-        .filter(F.col(a_col) < F.col(b_col))
-        .select(*keep)
-        .distinct()  # a pair may collide in several bands — verify once
-    )
+    cand = collision_pairs(
+        bands, ["t", "band"], id_col, a_col, b_col, carry=cols[1:]
+    ).distinct()  # a pair may collide in several bands — verify once
     out = cand.withColumn(
-        "hamming", F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
+        "hamming",
+        F.bit_count(
+            F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+        ),
     ).filter(F.col("hamming") <= max_hamming)
     if real_col:
-        out = out.filter(
-            (F.col("__ra") & F.col("__rb"))
-            | (
-                (F.col("hamming") == 0)
-                & (F.col("__ra") == F.col("__rb"))
-            )
-        )
+        ra, rb = F.col(f"{real_col}_a"), F.col(f"{real_col}_b")
+        out = out.filter((ra & rb) | ((F.col("hamming") == 0) & (ra == rb)))
     return out.select(
         a_col, b_col, F.col("hamming").cast("int").alias("hamming")
     )
@@ -698,23 +720,18 @@ def embedding_near_dups(
     interpreted HOF math."""
     from pdftableextractor_spark.kernels.vectors import pairwise_cosine_udf
 
-    e = embeddings.select(
-        "vec_id", F.col(block_col).alias("block"), "embedding"
-    )
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), "block"
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"), "block"
-    )
     pcos = pairwise_cosine_udf()
     return (
-        a.join(b, "block")
-        .filter(F.col("vec_a") < F.col("vec_b"))
+        collision_pairs(
+            embeddings, block_col, "vec_id", "vec_a", "vec_b",
+            carry=["embedding"],
+        )
         .select(
             "vec_a",
             "vec_b",
-            F.round(pcos(F.col("emb_a"), F.col("emb_b")), 6).alias("cos"),
+            F.round(
+                pcos(F.col("embedding_a"), F.col("embedding_b")), 6
+            ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -1179,47 +1196,98 @@ def containment_pairs(
     arr = sh.groupBy("doc_id").agg(
         F.collect_list("s").alias("arr")
     ).join(sz, "doc_id").localCheckpoint(eager=True)
-    out = (
-        cand.join(
-            arr.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("arr").alias("arr_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arr.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("arr").alias("arr_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
-        .filter(
-            F.col("inter") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "doc_a",
-        "doc_b",
-        F.col("inter").cast("bigint").alias("inter"),
+    pairs = _attach_ends(
+        cand, arr.withColumnRenamed("sz", "size"), ["arr", "size"]
+    ).withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
+    return _containment_tail(pairs, "inter", t_micro)
+
+
+def _containment_tail(
+    pairs: DataFrame,
+    count_col: str,
+    t_micro: int,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+) -> DataFrame:
+    """The shared containment verify over pairs carrying an intersection
+    count ``count_col`` and both set sizes (``size_a``, ``size_b``): the
+    pure-integer threshold ``count·10^6 >= t_micro·min(size)`` (so the
+    DuckDB oracle matches bit-for-bit), then
+    (a, b, count, size_a, size_b, containment) with the exact HALF_UP
+    ratio."""
+    small = F.least("size_a", "size_b")
+    return pairs.filter(
+        F.col(count_col) * F.lit(1_000_000) >= F.lit(t_micro) * small
+    ).select(
+        a_col,
+        b_col,
+        F.col(count_col).cast("bigint").alias(count_col),
         F.col("size_a").cast("bigint").alias("size_a"),
         F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("inter"), F.least("size_a", "size_b")
-        ).alias("containment"),
+        half_up_ratio6(F.col(count_col), small).alias("containment"),
     )
 
 
-def exact_ratio_round6(numer, denom):
+def capped_containment_pairs(
+    sigs: DataFrame,
+    key_cols,
+    threshold: float,
+    max_df: int,
+) -> DataFrame:
+    """Containment pairs over per-item signature SETS with a stop-key cap
+    — the shared body of ``video_near_dups`` (frame hashes) and
+    ``binary_near_dups`` (CDC chunk hashes): (asset_a, asset_b, shared,
+    size_a, size_b, containment), containment = |A∩B| / min(|A|, |B|)
+    over each ``asset_id``'s DISTINCT ``key_cols`` rows, asset_a < asset_b.
+
+    STOP-KEY rule (the CCNet line-frequency idea): a key occurring in
+    more than ``max_df`` items is dropped from EVERY signature before
+    sizes are counted, so the key self-join's per-key fan-out is bounded
+    by ``max_df`` and "shared only boilerplate keys" pairs disappear.
+
+    Shape: distinct signature rows, checkpointed because the df census
+    and the capped self-join both read them (the signature kernel would
+    otherwise run twice); one census aggregate; the capped rows are
+    checkpointed again (sizes + both join sides); candidates form ONLY
+    through ``collision_pairs`` on the key; per-pair shared counts, both
+    sizes attached, then the pure-integer ``_containment_tail``.
+    Thresholds: 0 < threshold <= 1."""
+    if not (0.0 < threshold <= 1.0):
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    t_micro = int(round(float(threshold) * 1_000_000))
+    id_col, a_col, b_col = "asset_id", "asset_a", "asset_b"
+    # executor-loss caveat for both checkpoints: the FAULT-TOLERANCE
+    # TRADE note on containment_pairs
+    sigs = sigs.distinct().localCheckpoint(eager=True)
+    dfreq = sigs.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__df"))
+    sigs = (
+        sigs.join(dfreq, key_cols)
+        .filter(F.col("__df") <= max_df)
+        .select(id_col, *key_cols)
+        .localCheckpoint(eager=True)
+    )
+    sizes = sigs.groupBy(id_col).agg(F.count(F.lit(1)).alias("size"))
+    shared = (
+        collision_pairs(sigs, key_cols, id_col, a_col, b_col)
+        .groupBy(a_col, b_col)
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return _containment_tail(
+        _attach_ends(shared, sizes, ["size"], id_col, a_col, b_col),
+        "shared",
+        t_micro,
+        a_col,
+        b_col,
+    )
+
+
+def half_up_ratio6(numer, denom):
     """HALF_UP(numer/denom) to 6 digits in EXACT integer arithmetic — the
     q61/q63 decimal(38,0) pattern: double round(x, 6) disagrees between
     Spark and DuckDB on real ratios like 323/640, so the rounding is
     (2a·10^6 + d) div (2d), matching DuckDB HUGEINT HALF_UP bit-for-bit.
-    Shared by containment_pairs and the video frame-containment path."""
+    Used by ``_containment_tail`` (containment_pairs and the capped
+    video / CDC containment path)."""
     d = denom.cast("decimal(38,0)")
     x6 = numer.cast("decimal(38,0)") * F.lit(2_000_000) + d
     c6 = (x6 - F.pmod(x6, F.lit(2) * d)) / (F.lit(2) * d)

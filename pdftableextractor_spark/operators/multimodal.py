@@ -1052,14 +1052,16 @@ def _pseudo_hash(pb: bytes) -> int:
 
 
 def _sig_kernel(routes, out_col: str):
-    """mapInPandas kernel FACTORY shared by the image and audio signature
-    scans. ``routes`` is a sequence of (sig_prefix, decode_hash) pairs
-    tried in order — a payload matching a prefix hashes through that
-    route's ``decode_hash`` (real=true). Anything else — no matching
-    container signature, hostile header, NULL, or a ``decode_hash``
-    that raises or returns None (an unsupported shape, e.g. progressive
-    JPEG, or a decodable payload whose signature is DEGENERATE, e.g.
-    flat-energy audio) — degrades to a sha256-derived pseudo-hash
+    """mapInPandas kernel FACTORY shared by the image, audio and video
+    signature scans. ``routes`` is a sequence of (sig_prefix, decode_hash)
+    pairs tried in order — a payload matching a prefix hashes through that
+    route's ``decode_hash`` (real=true); a route that returns a LIST of
+    hashes (video: one per distinct frame dhash) emits one row per hash.
+    Anything else — no matching container signature, hostile header,
+    NULL, or a ``decode_hash`` that raises or returns None (an
+    unsupported shape, e.g. progressive JPEG, a frameless video, or a
+    decodable payload whose signature is DEGENERATE, e.g. flat-energy
+    audio) — degrades to a sha256-derived pseudo-hash
     (real=false): byte-identical payloads still pair as exact dups, but
     no perceptual similarity is ever claimed for them. One factory
     means the degrade semantics can never fork between modalities, and
@@ -1074,7 +1076,6 @@ def _sig_kernel(routes, out_col: str):
                 pdf["asset_id"].values, pdf["payload"].values
             ):
                 pb = bytes(payload) if payload is not None else b""
-                ids.append(aid)
                 h = None
                 for sig_prefix, decode_hash in routes:
                     if pb[: len(sig_prefix)] == sig_prefix:
@@ -1083,12 +1084,11 @@ def _sig_kernel(routes, out_col: str):
                         except Exception:
                             h = None
                         break  # prefixes are disjoint: one route only
-                if h is not None:
-                    hashes.append(h)
-                    real.append(True)
-                else:
-                    hashes.append(_pseudo_hash(pb))
-                    real.append(False)
+                hs = [_pseudo_hash(pb)] if h is None else h
+                hs = hs if isinstance(hs, list) else [hs]
+                ids.extend([aid] * len(hs))
+                hashes.extend(hs)
+                real.extend([h is not None] * len(hs))
             yield pd.DataFrame(
                 {
                     "asset_id": ids,
@@ -1168,13 +1168,24 @@ def image_near_dups(
     (``dedup.hamming_near_dup_pairs``); pseudo-hashed undecodables only
     pair exactly and never against real hashes (the ``real`` rule
     documented there)."""
+    return _perceptual_pairs(
+        image_phashes(assets), "phash", max_hamming, n_bands
+    )
+
+
+def _perceptual_pairs(
+    sigs: DataFrame, hash_col: str, max_hamming: int, n_bands: int
+) -> DataFrame:
+    """(asset_a, asset_b, hamming) over (asset_id, ``hash_col``, real)
+    perceptual signatures: the shared multiband Hamming join with the
+    ``real`` rule."""
     from pdftableextractor_spark.operators.dedup import (
         hamming_near_dup_pairs,
     )
 
     return hamming_near_dup_pairs(
-        image_phashes(assets),
-        "phash",
+        sigs,
+        hash_col,
         PHASH_BITS,
         max_hamming,
         n_bands,
@@ -1247,82 +1258,32 @@ def audio_near_dups(
     recording re-encoded at a different volume or with a short edit
     pairs up; text/byte dedup can't see either. Pseudo-hashed
     undecodables pair exactly only (the shared ``real`` rule)."""
-    from pdftableextractor_spark.operators.dedup import (
-        hamming_near_dup_pairs,
-    )
-
-    return hamming_near_dup_pairs(
-        audio_fingerprints(assets),
-        "afp",
-        PHASH_BITS,
-        max_hamming,
-        n_bands,
-        id_col="asset_id",
-        a_col="asset_a",
-        b_col="asset_b",
-        real_col="real",
+    return _perceptual_pairs(
+        audio_fingerprints(assets), "afp", max_hamming, n_bands
     )
 
 
-def _video_frame_hash_kernel(
-    hash_every_ms: int | None = None, max_frames: int | None = None
-):
-    """mapInPandas kernel FACTORY behind video_near_dups: one row per
-    DISTINCT per-frame dhash of each decodable video (decode once);
-    undecodable payloads emit a single sha pseudo-hash row (real=false)
-    — byte-identical videos still pair exactly, nothing perceptual is
-    claimed.
+def _video_frame_dhashes(
+    pb: bytes, hash_every_ms: int | None, max_frames: int | None
+) -> list[int] | None:
+    """The DISTINCT per-frame dhashes of one AVI payload, sorted (decode
+    once; None for a frameless video, so it degrades to the pseudo-hash).
 
     ``hash_every_ms`` hashes only time-sampled frames (stride
     round(fps·ms/1000), matching _frame_sample_kernel's timestamp math)
     and ``max_frames`` caps the hashed count per video with evenly
     spaced indices — both bound the decode+hash kernel cost to O(1) per
     video instead of O(frames). Default (None/None) hashes every frame."""
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, real = [], [], []
-            for aid, payload in zip(
-                pdf["asset_id"].values, pdf["payload"].values
-            ):
-                pb = bytes(payload) if payload is not None else b""
-                if pb[:4] == AVI_SIG and pb[8:12] == b"AVI ":
-                    try:
-                        frames, fps = decode_avi(pb)
-                        n = frames.shape[0]
-                        if n:
-                            idx = np.arange(n)
-                            if hash_every_ms is not None and fps:
-                                step = max(
-                                    1,
-                                    int(round(fps * hash_every_ms / 1000.0)),
-                                )
-                                idx = idx[::step]
-                            if max_frames is not None and len(idx) > max_frames:
-                                idx = idx[
-                                    np.linspace(
-                                        0, len(idx) - 1, max_frames
-                                    ).astype(int)
-                                ]
-                            seen = {image_dhash(frames[i]) for i in idx}
-                            ids.extend([aid] * len(seen))
-                            hashes.extend(sorted(seen))
-                            real.extend([True] * len(seen))
-                            continue
-                    except Exception:
-                        pass
-                ids.append(aid)
-                hashes.append(_pseudo_hash(pb))
-                real.append(False)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "fhash": pd.Series(hashes, dtype="int64"),
-                    "real": real,
-                }
-            )
-
-    return kern
+    frames, fps = decode_avi(pb)
+    n = frames.shape[0]
+    if not n:
+        return None
+    idx = np.arange(n)
+    if hash_every_ms is not None and fps:
+        idx = idx[:: max(1, int(round(fps * hash_every_ms / 1000.0)))]
+    if max_frames is not None and len(idx) > max_frames:
+        idx = idx[np.linspace(0, len(idx) - 1, max_frames).astype(int)]
+    return sorted({image_dhash(frames[i]) for i in idx})
 
 
 def video_frame_hashes(
@@ -1331,14 +1292,20 @@ def video_frame_hashes(
     max_frames: int | None = None,
 ) -> DataFrame:
     """(asset_id, fhash, real) — one row per distinct per-frame dhash of
-    each video asset; the signature scan of video-content dedup. See
-    ``video_near_dups`` for the sampling knobs' recall trade."""
+    each video asset; the signature scan of video-content dedup through
+    the shared ``_sig_kernel`` (an undecodable or frameless payload emits
+    one sha pseudo-hash row, real=false, so byte-identical videos still
+    pair exactly). See ``video_near_dups`` for the sampling knobs'
+    recall trade."""
+    kern = _sig_kernel(
+        ((AVI_SIG, lambda pb: _video_frame_dhashes(
+            pb, hash_every_ms, max_frames
+        )),),
+        "fhash",
+    )
     return assets.filter(F.col("kind") == "video").select(
         "asset_id", "payload"
-    ).mapInPandas(
-        _video_frame_hash_kernel(hash_every_ms, max_frames),
-        schema="asset_id string, fhash long, real boolean",
-    )
+    ).mapInPandas(kern, schema="asset_id string, fhash long, real boolean")
 
 
 def video_near_dups(
@@ -1372,12 +1339,13 @@ def video_near_dups(
     undecodable payloads still pair exactly through their single pseudo
     -hash row unless more than max_frame_df copies exist.
 
-    Shape: one decode per payload in the Arrow kernel; a frame-hash
-    document-frequency aggregate; candidates form ONLY through the
-    (df-capped) equi-join on fhash; the threshold filter is pure-integer
-    and the emitted containment uses the shared exact-int rounding
-    (``dedup.exact_ratio_round6``). Pseudo-hash rows never join real
-    frame hashes (the real flag must match).
+    Shape: one decode per payload in the Arrow kernel; everything after
+    the scan is ``dedup.capped_containment_pairs`` keyed on
+    (fhash, real) — distinct signature rows, a per-key document-frequency
+    census, candidates ONLY through the df-capped self-join, the
+    pure-integer threshold and the exact HALF_UP containment
+    (``dedup.half_up_ratio6``). Keying on ``real`` means pseudo-hash rows
+    never join real frame hashes. A repeated asset row counts once.
 
     SAMPLING KNOBS (``hash_every_ms``, ``max_frames``): real video runs
     hours at 24-60 fps — hashing every frame makes the signature kernel
@@ -1392,70 +1360,17 @@ def video_near_dups(
     frames hash alike, so scene overlap still intersects); hash every
     frame (the default) when exact clip detection matters more than
     kernel cost."""
-    from pdftableextractor_spark.operators.dedup import exact_ratio_round6
+    from pdftableextractor_spark.operators.dedup import (
+        capped_containment_pairs,
+    )
 
-    t_micro = int(round(float(threshold) * 1_000_000))
-    raw = video_frame_hashes(
-        assets, hash_every_ms=hash_every_ms, max_frames=max_frames
-    )
-    dfreq = raw.groupBy("fhash").agg(
-        F.count_distinct("asset_id").alias("__df")
-    )
-    sigs = (
-        raw.join(dfreq, "fhash")
-        .filter(F.col("__df") <= max_frame_df)
-        .select("asset_id", "fhash", "real")
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
-        .localCheckpoint(eager=True)
-    )
-    sizes = sigs.groupBy("asset_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sigs.select(
-        F.col("asset_id").alias("asset_a"), "fhash",
-        F.col("real").alias("real_a"),
-    )
-    b = sigs.select(
-        F.col("asset_id").alias("asset_b"), "fhash",
-        F.col("real").alias("real_b"),
-    )
-    shared = (
-        a.join(b, "fhash")
-        .filter(
-            (F.col("asset_a") < F.col("asset_b"))
-            & (F.col("real_a") == F.col("real_b"))
-        )
-        .groupBy("asset_a", "asset_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    out = (
-        shared.join(
-            sizes.select(
-                F.col("asset_id").alias("asset_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "asset_a",
-        )
-        .join(
-            sizes.select(
-                F.col("asset_id").alias("asset_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "asset_b",
-        )
-        .filter(
-            F.col("shared") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "asset_a",
-        "asset_b",
-        F.col("shared").cast("bigint").alias("shared"),
-        F.col("size_a").cast("bigint").alias("size_a"),
-        F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("shared"), F.least("size_a", "size_b")
-        ).alias("containment"),
+    return capped_containment_pairs(
+        video_frame_hashes(
+            assets, hash_every_ms=hash_every_ms, max_frames=max_frames
+        ),
+        ["fhash", "real"],
+        threshold,
+        max_frame_df,
     )
 
 
@@ -1613,72 +1528,20 @@ def binary_near_dups(
     stop-frame rule, one modality over).
 
     Shape at 100 TB: the chunk kernel is O(bytes) vectorized numpy per
-    payload; candidates form ONLY through the df-capped equi-join on
-    chash (never all-pairs); the threshold filter is pure-integer with
-    the shared exact-int rounding. Thresholds: 0 < threshold <= 1."""
-    from pdftableextractor_spark.operators.dedup import exact_ratio_round6
+    payload; everything after it is ``dedup.capped_containment_pairs``
+    keyed on chash — candidates form ONLY through the df-capped self-join
+    (never all-pairs), the threshold filter is pure-integer with the
+    exact HALF_UP rounding (``dedup.half_up_ratio6``). Thresholds:
+    0 < threshold <= 1."""
+    from pdftableextractor_spark.operators.dedup import (
+        capped_containment_pairs,
+    )
 
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    t_micro = int(round(float(threshold) * 1_000_000))
-    sigs = (
+    return capped_containment_pairs(
         cdc_chunk_hashes(
             assets, avg_bits=avg_bits, min_size=min_size, max_size=max_size
-        )
-        .distinct()
-        # the df census AND the capped join both reference this lineage —
-        # without the checkpoint the chunk kernel re-chunks every payload
-        # twice (round-7; the signature table is ~0.5% of corpus bytes at
-        # the production avg_bits, the cheapest frame here to hold)
-        .localCheckpoint(eager=True)
-    )
-    dfreq = sigs.groupBy("chash").agg(
-        F.count(F.lit(1)).alias("__df")
-    )
-    sigs = (
-        sigs.join(dfreq, "chash")
-        .filter(F.col("__df") <= max_chunk_df)
-        .select("asset_id", "chash")
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
-        .localCheckpoint(eager=True)
-    )
-    sizes = sigs.groupBy("asset_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sigs.select(F.col("asset_id").alias("asset_a"), "chash")
-    b = sigs.select(F.col("asset_id").alias("asset_b"), "chash")
-    shared = (
-        a.join(b, "chash")
-        .filter(F.col("asset_a") < F.col("asset_b"))
-        .groupBy("asset_a", "asset_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    out = (
-        shared.join(
-            sizes.select(
-                F.col("asset_id").alias("asset_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "asset_a",
-        )
-        .join(
-            sizes.select(
-                F.col("asset_id").alias("asset_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "asset_b",
-        )
-        .filter(
-            F.col("shared") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "asset_a",
-        "asset_b",
-        F.col("shared").cast("bigint").alias("shared"),
-        F.col("size_a").cast("bigint").alias("size_a"),
-        F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("shared"), F.least("size_a", "size_b")
-        ).alias("containment"),
+        ),
+        ["chash"],
+        threshold,
+        max_chunk_df,
     )

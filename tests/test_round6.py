@@ -753,6 +753,50 @@ def test_binary_near_dups_stop_chunk_rule(spark):
     assert capped.count() == 0           # stop-chunk rule kills it
 
 
+@pytest.mark.parametrize("op", ["video_near_dups", "binary_near_dups"])
+def test_containment_near_dups_ignore_repeated_asset_rows(spark, op):
+    """Containment is over each asset's DISTINCT signature set, so a
+    second copy of an asset row must change neither the pair set nor any
+    shared / size / containment value (a repeated row once doubled the
+    video path's shared and size counts)."""
+    from pdftableextractor_spark.operators import multimodal
+    from tests.test_round5 import _encode_avi
+
+    if op == "video_near_dups":
+        rng = np.random.RandomState(41)
+        frames = [
+            np.repeat(np.repeat(
+                rng.randint(0, 256, (6, 11, 3), dtype=np.uint8), 4, axis=0),
+                4, axis=1)
+            for _ in range(6)
+        ]
+        full, clip = _encode_avi(frames, fps=5), _encode_avi(frames[:3], fps=5)
+        other = _encode_avi(frames[3:], fps=5)
+        kw = {}
+    else:
+        full = _pseudo_bytes("doc", 4000)
+        clip, other = full[:2500], full[1500:]
+        kw = {"avg_bits": 6}
+    rows = [
+        ("full", "video", bytearray(full)),
+        ("clip", "video", bytearray(clip)),
+        ("other", "video", bytearray(other)),
+    ]
+    schema = "asset_id string, kind string, payload binary"
+
+    def pairs(data):
+        return sorted(
+            tuple(r)
+            for r in getattr(multimodal, op)(
+                spark.createDataFrame(data, schema), threshold=0.3, **kw
+            ).collect()
+        )
+
+    once = pairs(rows)
+    assert {(r[0], r[1]) for r in once} >= {("clip", "full"), ("full", "other")}
+    assert pairs(rows + [rows[0]]) == once
+
+
 # ---------------------------------------------------------------------------
 # distributed BPE tokenizer — learned subword vocabulary + Arrow encoder
 # ---------------------------------------------------------------------------
