@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import time
 
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -30,10 +31,19 @@ import bench
 from bench import _synth_corpus_path, host_calibration
 
 
+# expression ids, plan ids and RDD ids count up per session, so they
+# differ between two runs of one commit
+_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
 def formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def normalized(plan: str) -> str:
+    return _SESSION_IDS.sub(r"\1", plan)
 
 
 def capture(closure):
@@ -91,9 +101,9 @@ def main() -> None:
             df, cut = capture(queries[name])
             path = os.path.join(args.out, f"{name}{args.suffix}.txt")
             with open(path, "w") as f:
-                f.write(formatted_plan(df))
+                f.write(normalized(formatted_plan(df)))
                 for k, plan in enumerate(cut, 1):
-                    f.write(f"\n## localCheckpoint {k}\n{plan}")
+                    f.write(f"\n## localCheckpoint {k}\n{normalized(plan)}")
             print("wrote", path)
 
     names = list(queries) if args.time_all else (args.time or [])

@@ -1480,7 +1480,6 @@ def semantic_dedup(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023): cluster
     the corpus by embedding similarity and keep one representative per
@@ -1511,7 +1510,7 @@ def semantic_dedup(
     (embedding_near_dups) can blow up on a clustered corpus."""
     from pdftableextractor_spark.operators.similarity import knn_join
 
-    idt = dict(embeddings.dtypes)[id_col]
+    idt = dict(embeddings.dtypes)["vec_id"]
     # bootstrap guard: an empty corpus has nothing to cluster and would
     # crash the k-means init — the correct output is simply empty
     if embeddings.isEmpty():
@@ -1519,12 +1518,7 @@ def semantic_dedup(
             [], f"vec_id {idt}, component {idt}, keep boolean"
         )
     nn = knn_join(
-        embeddings,
-        k=k,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        iters=iters,
-        id_col=id_col,
+        embeddings, k=k, n_cells=n_cells, n_probe=n_probe, iters=iters
     )
     edges = (
         nn.filter(F.col("cos") >= threshold)
@@ -1545,7 +1539,7 @@ def semantic_dedup(
     rep = comp.groupBy("__c").agg(F.min("__n").alias("__rep"))
     cmap = comp.join(rep, "__c").select("__n", "__rep")
     return (
-        embeddings.select(F.col(id_col).alias("vec_id"))
+        embeddings.select("vec_id")
         .join(cmap, F.col("vec_id") == cmap["__n"], "left")
         .select(
             "vec_id",
@@ -1563,10 +1557,8 @@ def semantic_dedup_incremental(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
     index_nprobe: int = 2,
     corpus_n_cells: int | None = None,
-    corpus_cell_salt: int = 1,
 ) -> DataFrame:
     """Incremental SemDeDup — the production cadence where embedding
     batches arrive against a standing corpus (the semantic analog of
@@ -1606,7 +1598,7 @@ def semantic_dedup_incremental(
         knn_join_between,
     )
 
-    idt = dict(new_embeddings.dtypes)[id_col]
+    idt = dict(new_embeddings.dtypes)["vec_id"]
     # bootstrap guards: an empty batch returns empty; an empty standing
     # corpus (the FIRST batch of the cadence) means nothing can be "near
     # old" — the within-batch dedup alone decides, with near_old=false
@@ -1623,7 +1615,6 @@ def semantic_dedup_incremental(
         n_cells=n_cells,
         n_probe=n_probe,
         iters=iters,
-        id_col=id_col,
     )
     if not isinstance(old, str) and old.isEmpty():
         return sd.select(
@@ -1636,9 +1627,7 @@ def semantic_dedup_incremental(
         spark = new_embeddings.sparkSession
         nn_old = ivf_topk_indexed_batch(
             spark,
-            new_embeddings.select(
-                F.col(id_col).alias("qid"), F.col("embedding")
-            ),
+            new_embeddings.select(F.col("vec_id").alias("qid"), "embedding"),
             old,
             k=1,
             nprobe=index_nprobe,
@@ -1651,13 +1640,11 @@ def semantic_dedup_incremental(
             k=1,
             # the STANDING corpus defines this fit's cell geometry — size
             # it for the corpus (cells that fit an executor), not for the
-            # batch; corpus_cell_salt splits fat cells (result-identical)
+            # batch
             n_cells=corpus_n_cells or n_cells,
             n_probe=n_probe,
             iters=iters,
-            id_col=id_col,
             exclude_self=True,
-            cell_salt=corpus_cell_salt,
         )
     flagged = (
         nn_old.filter(F.col("cos") >= threshold)

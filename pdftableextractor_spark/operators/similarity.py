@@ -1,21 +1,30 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over a (vec_id, embedding array<float>) table.
 
-Three paths, same result contract (vec_id, cos):
+Ranking contract — every top-k here, single-query or per-query:
+``cos`` is the query cosine rounded HALF_UP to 6 digits, rows rank by
+cos descending with ties to the smaller vec_id, and the first k rows
+are kept. ``_ranked`` applies it to one query's candidates (Spark runs
+TakeOrderedAndProject: per-partition heaps, no full sort shuffle), so
+``cosine_topk`` (the exact baseline), ``lsh_topk``, ``ivf_topk``,
+``sq8_topk`` and the index paths differ only in which candidates they
+score. ``_cell_knn`` applies it per query for the kNN joins, whose
+output is (qid, vec_id, cos, rnk) with row_number ranks 1..k.
 
-  cosine_topk   brute-force exact top-k — the correctness baseline; one scan,
-                one ordered limit (Spark runs TakeOrderedAndProject: per-
-                partition heaps, no full sort shuffle).
-  lsh_topk      random-hyperplane LSH, multi-table: brute-force the union of
-                the query's sign buckets across n_tables hyperplane sets
-                (~n_tables/2^n_planes of a uniform corpus).
-  ivf_topk      coarse inverted-file search: rank cells by centroid cosine,
-                probe the top ``nprobe`` cells, brute-force inside.
+Stamp rule — every persisted index table carries a ``build_id`` that is
+deterministic (build parameters plus ``_content_stamp``: row count and
+an xor of per-row (vec_id, embedding) hashes; no wall clock), so a rerun
+of the same build converges and re-embedded vectors under the same ids
+stamp differently. A build writes the tables queries scan first and the
+table queries open (IVF centroids, SQ8 meta) last; a query checks the
+stamps of the rows it read after pruning against the opened table's
+(``_require_stamp``), so a build torn between writes raises instead of
+answering from a mismatched index, at O(rows read) cost.
 
 All cosine/bucket math runs in the Arrow-batched numpy kernels
 (kernels/vectors.py): one BLAS matmul per batch instead of per-row
 interpreted higher-order functions — the round-1 verdict's 1024-d/100 TB
-fix. The plan stays distributed: kernels are narrow per-partition maps; the
-only ordered step is the final top-k heap.
+fix. The plan stays distributed: kernels are narrow per-partition maps;
+the only ordered steps are the top-k heaps.
 """
 
 from __future__ import annotations
@@ -25,25 +34,51 @@ from pyspark.sql import functions as F
 
 from pdftableextractor_spark.kernels.vectors import cosine_to_query_udf
 
+# md5-order salt of the k-means init and fit sample; IVF build stamps
+# record it
+_KMEANS_SEED = 9
+
+
+def _require_positive(**values: int) -> None:
+    for name, v in values.items():
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
+
+
+def _ranked(df: DataFrame, k: int) -> DataFrame:
+    return df.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
+
+
+def _cos_topk(cand: DataFrame, query_vec, k: int) -> DataFrame:
+    """Score (vec_id, embedding) candidates against the query and rank."""
+    cos = cosine_to_query_udf(query_vec)
+    return _ranked(
+        cand.select(
+            "vec_id", F.round(cos(F.col("embedding")), 6).alias("cos")
+        ),
+        k,
+    )
+
+
+def _probe_cells(cents: DataFrame, query_vec, nprobe: int) -> DataFrame:
+    """The ``nprobe`` cells whose centroids are nearest the query (ties
+    to the smaller cell): (cell, ccos)."""
+    cos = cosine_to_query_udf(query_vec)
+    return (
+        cents.select("cell", cos(F.col("centroid")).alias("ccos"))
+        .orderBy(F.desc("ccos"), F.asc("cell"))
+        .limit(nprobe)
+    )
+
 
 def cosine_topk(
     embeddings: DataFrame, query_vec, k: int = 10
 ) -> DataFrame:
-    """Exact brute-force top-k by cosine; deterministic tie-break on vec_id."""
-    cos = cosine_to_query_udf(query_vec)
-    return (
-        embeddings.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    """Exact brute-force top-k: one scan, one ordered limit."""
+    return _cos_topk(embeddings, query_vec, k)
 
 
-def centroid_mean(
-    df: DataFrame, cell_col: str = "cell", emb_col: str = "embedding"
-) -> DataFrame:
+def centroid_mean(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Per-cell element-wise mean vector: (cell, centroid array<double>).
 
     Shape (the round-2 verdict's ×dim fix): a per-partition mapInPandas
@@ -61,9 +96,7 @@ def centroid_mean(
     )
 
     cell_type = dict(df.dtypes)[cell_col]
-    src = df.select(
-        F.col(cell_col).alias("cell"), F.col(emb_col).alias("embedding")
-    )
+    src = df.select(F.col(cell_col).alias("cell"), "embedding")
     partials = src.mapInPandas(
         centroid_partial_kernel,
         schema=f"cell {cell_type}, sum_vec array<double>, n bigint",
@@ -74,9 +107,7 @@ def centroid_mean(
     )
 
 
-def _centroid_mean_explode(
-    df: DataFrame, cell_col: str = "cell", emb_col: str = "embedding"
-) -> DataFrame:
+def _centroid_mean_explode(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Pure-JVM per-dim formulation: posexplode + groupBy(cell, dim) +
     array_agg reassembly. Map-side combine keeps the SHUFFLE tiny, but the
     scan-side generator emits rows×dim rows — linear-in-dim row inflation
@@ -84,7 +115,7 @@ def _centroid_mean_explode(
     the bench.py --centroids comparator."""
     dims = df.select(
         F.col(cell_col).alias("cell"),
-        F.posexplode(emb_col).alias("dim", "v"),
+        F.posexplode("embedding").alias("dim", "v"),
     )
     per_dim = dims.groupBy("cell", "dim").agg(
         F.avg(F.col("v").cast("double")).alias("m")
@@ -96,18 +127,10 @@ def _centroid_mean_explode(
     )
 
 
-def ivf_centroids(embeddings: DataFrame, cell_col: str = "label") -> DataFrame:
-    """Per-cell mean vector: (cell, centroid array<double>) — the Arrow
-    partial-sum kernel path (see centroid_mean)."""
-    return centroid_mean(embeddings, cell_col=cell_col)
-
-
 def kmeans_cells(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
     """Lloyd k-means cell assignment for IVF over an UNLABELED corpus
@@ -131,8 +154,7 @@ def kmeans_cells(
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     cents = kmeans_centroids(
-        embeddings, k=k, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
+        embeddings, k=k, iters=iters, fit_sample_per_cell=fit_sample_per_cell
     )
     return embeddings.withColumn(
         "cell", nearest_centroid_udf(cents)(F.col("embedding"))
@@ -143,15 +165,14 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
     fit_sample_per_cell: int | None = 256,
 ) -> list:
     """The Lloyd loop itself: returns the final k centroids as a Python
     list (k × dim doubles — driver-small by construction; they must be
     broadcast into the assignment closure anyway). Exposed separately so
     multi-probe consumers (dedup.embedding_near_dups_unlabeled) can assign
-    each vector to its top-n cells from the SAME fit.
+    each vector to its top-n cells from the SAME fit. A corpus of fewer
+    than k vectors gets one centroid per vector.
 
     SAMPLED FIT (the default): the loop runs over a deterministic
     md5-ordered sample of ``fit_sample_per_cell * k`` vectors, not the
@@ -173,10 +194,10 @@ def kmeans_centroids(
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     md5_order = F.md5(
-        F.concat(F.lit(f"km:{seed}:"), F.col(id_col).cast("string"))
+        F.concat(F.lit(f"km:{_KMEANS_SEED}:"), F.col("vec_id").cast("string"))
     )
-    ordered = embeddings.select(id_col, "embedding").orderBy(
-        md5_order, F.col(id_col)
+    ordered = embeddings.select("vec_id", "embedding").orderBy(
+        md5_order, F.col("vec_id")
     )
     if fit_sample_per_cell is not None:
         # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
@@ -184,7 +205,7 @@ def kmeans_centroids(
         fit = ordered.limit(
             max(k, fit_sample_per_cell * k)
         ).localCheckpoint(eager=True)
-        init = fit.orderBy(md5_order, F.col(id_col)).limit(k).collect()
+        init = fit.orderBy(md5_order, F.col("vec_id")).limit(k).collect()
     else:
         fit = embeddings
         init = ordered.limit(k).collect()
@@ -220,32 +241,23 @@ def lsh_topk(
     embeddings: DataFrame,
     query_vec,
     k: int = 10,
-    n_planes: int = 4,
     n_tables: int = 4,
 ) -> DataFrame:
     """Random-hyperplane LSH ANN, MULTI-TABLE: brute-force the union of the
-    query's sign buckets across ``n_tables`` independently-seeded hyperplane
-    sets (round-2 verdict fix: a single table misses any neighbor whose dot
-    products straddle one plane — P[miss] ≈ 1-(1-miss₁)… falls geometrically
-    with tables). A uniform corpus scans ~n_tables/2^n_planes of the
+    query's sign buckets across ``n_tables`` independently-seeded sets of
+    4 hyperplanes (round-2 verdict fix: a single table misses any neighbor
+    whose dot products straddle one plane — P[miss] ≈ 1-(1-miss₁)… falls
+    geometrically with tables). A uniform corpus scans ~n_tables/16 of the
     vectors. One scan either way: the candidate predicate is an ANY-table
     match inside one stacked-matmul kernel, so candidates never duplicate
     and no union/distinct is needed."""
-    cos = cosine_to_query_udf(query_vec)
     from pdftableextractor_spark.kernels.vectors import lsh_multi_match_udf
 
-    planes_list = lsh_planes(len(query_vec), n_planes, n_tables)
+    planes_list = lsh_planes(len(query_vec), n_tables=n_tables)
     cand = embeddings.filter(
         lsh_multi_match_udf(planes_list, query_vec)(F.col("embedding"))
     )
-    return (
-        cand.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _cos_topk(cand, query_vec, k)
 
 
 def ivf_topk(
@@ -255,28 +267,17 @@ def ivf_topk(
     nprobe: int = 2,
     cell_col: str = "label",
 ) -> DataFrame:
-    """IVF approximate top-k: rank cells by centroid cosine, brute-force only
+    """IVF approximate top-k: rank the per-cell mean vectors (the Arrow
+    partial-sum kernel, see centroid_mean) by cosine, brute-force only
     the best ``nprobe`` cells."""
-    cos = cosine_to_query_udf(query_vec)
-    cents = ivf_centroids(embeddings, cell_col)
-    probe_cells = (
-        cents.select("cell", cos(F.col("centroid")).alias("ccos"))
-        .orderBy(F.desc("ccos"), F.asc("cell"))
-        .limit(nprobe)
-        .select("cell")
-    )
+    probe_cells = _probe_cells(
+        centroid_mean(embeddings, cell_col), query_vec, nprobe
+    ).select("cell")
     cand = embeddings.join(
         F.broadcast(probe_cells),
         embeddings[cell_col] == probe_cells["cell"],
     )
-    return (
-        cand.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _cos_topk(cand, query_vec, k)
 
 
 def knn_join(
@@ -285,9 +286,6 @@ def knn_join(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    seed: int = 9,
     cell_salt: int = 1,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
@@ -295,11 +293,7 @@ def knn_join(
     ONE job — the SemDeDup-style semantic-dedup / clustering primitive
     (``ivf_topk`` answers one query vector; ``embedding_near_dups`` gives
     threshold pairs; this gives the full neighbor lists a semantic-dedup
-    or kNN-graph pass actually consumes).
-
-    Output: (qid, vec_id, cos, rnk) with rnk 1..k ranked by
-    (cos rounded to 6 desc, vec_id asc) — row_number semantics, ties
-    deterministic.
+    or kNN-graph pass actually consumes). Output: (qid, vec_id, cos, rnk).
 
     Shape (never all-pairs, never a cartesian):
       1. fit ``n_cells`` k-means centroids once (Lloyd, Arrow kernels —
@@ -310,7 +304,7 @@ def knn_join(
          neighbors across it);
       3. cogroup both sides on cell → ``knn_block_kernel``: per cell one
          (block × cell_size) BLAS matmul, per-query top-k within the
-         cell (stable-sort tie-break to smaller vec_id);
+         cell;
       4. global per-query reduce over the ≤ n_probe·k candidates:
          window-free — collect_list + array_sort + slice (no global sort,
          no Window; the frame is n·n_probe·k rows of ids+doubles).
@@ -338,9 +332,6 @@ def knn_join(
         n_cells=n_cells,
         n_probe=n_probe,
         iters=iters,
-        id_col=id_col,
-        emb_col=emb_col,
-        seed=seed,
         exclude_self=True,
         cell_salt=cell_salt,
         fit_sample_per_cell=fit_sample_per_cell,
@@ -354,9 +345,6 @@ def knn_join_between(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    seed: int = 9,
     exclude_self: bool = False,
     cell_salt: int = 1,
     fit_sample_per_cell: int | None = 256,
@@ -383,7 +371,6 @@ def knn_join_between(
     the hot cell. Use when cell-size histograms (or straggler tasks)
     say so; 1 (default) keeps the single-block layout."""
     from pdftableextractor_spark.kernels.vectors import (
-        knn_block_kernel,
         nearest_centroid_udf,
         nearest_centroids_udf,
     )
@@ -391,29 +378,28 @@ def knn_join_between(
     if n_probe is None:
         n_probe = n_cells
     n_probe = min(n_probe, n_cells)
-    idt = dict(data.dtypes)[id_col]
-    qidt = dict(queries.dtypes)[id_col]
     # bootstrap guard: an empty data side cannot seed a k-means fit
     # (the centroid kernels would crash on a zero-row init) — the
     # correct answer is simply "no neighbors". Costs one take(1) job.
     if data.isEmpty():
         return data.sparkSession.createDataFrame(
-            [], f"qid {qidt}, vec_id {idt}, cos double, rnk int"
+            [],
+            f"qid {dict(queries.dtypes)['vec_id']}, "
+            f"vec_id {dict(data.dtypes)['vec_id']}, cos double, rnk int",
         )
     cents = kmeans_centroids(
-        data, k=n_cells, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
+        data, k=n_cells, iters=iters, fit_sample_per_cell=fit_sample_per_cell
     )
     d = data.select(
-        nearest_centroid_udf(cents)(F.col(emb_col)).alias("cell"),
-        F.col(id_col).alias("vec_id"),
-        F.col(emb_col).alias("embedding"),
+        nearest_centroid_udf(cents)(F.col("embedding")).alias("cell"),
+        "vec_id",
+        "embedding",
     )
     qry = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(emb_col).alias("qemb"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qemb"),
         F.explode(
-            nearest_centroids_udf(cents, n_probe)(F.col(emb_col))
+            nearest_centroids_udf(cents, n_probe)(F.col("embedding"))
         ).alias("cell"),
     )
     if cell_salt > 1:
@@ -434,25 +420,31 @@ def knn_join_between(
                 )
             ).alias("cell"),
         )
-    # a (qid, vec_id) pair meets in at most ONE (sub-)cell (the data side
-    # is single-assigned — salted or not; the probe cells are distinct),
-    # so no dedup is needed before the reduce
+    return _cell_knn(qry, d, k, exclude_self)
+
+
+def _cell_knn(
+    qry: DataFrame, vecs: DataFrame, k: int, exclude_self: bool
+) -> DataFrame:
+    """Per-query top-k of (qid, qemb, cell) query rows against (cell,
+    vec_id, embedding) vectors: cogroup on cell through
+    ``knn_block_kernel`` (each query's top-k inside each cell), then a
+    window-free reduce over the ≤ n_probe·k candidates per query —
+    collect_list + array_sort + slice + posexplode, no global sort and
+    no Window. A (qid, vec_id) pair must meet in at most ONE cell (the
+    vectors are single-assigned, salted or not; the probe cells are
+    distinct), so no dedup runs before the reduce."""
+    from pdftableextractor_spark.kernels.vectors import knn_block_kernel
+
     cand = (
         qry.groupBy("cell")
-        .cogroup(d.groupBy("cell"))
+        .cogroup(vecs.groupBy("cell"))
         .applyInPandas(
             knn_block_kernel(k, exclude_self=exclude_self),
-            schema=f"qid {qidt}, vec_id {idt}, cos double",
+            schema=f"qid {dict(qry.dtypes)['qid']}, "
+            f"vec_id {dict(vecs.dtypes)['vec_id']}, cos double",
         )
     )
-    return _knn_reduce(cand, k)
-
-
-def _knn_reduce(cand: DataFrame, k: int) -> DataFrame:
-    """Window-free per-query top-k over a (qid, vec_id, cos) candidate
-    frame (≤ n_probe·k rows per query): collect_list + array_sort +
-    slice + posexplode — ranked by (cos rounded to 6 desc, vec_id asc),
-    row_number semantics, no global sort and no Window."""
     r6 = F.round(F.col("cos"), 6)
     top = cand.groupBy("qid").agg(
         F.slice(
@@ -479,14 +471,48 @@ def _knn_reduce(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _content_stamp(embeddings: DataFrame) -> str:
+    """``n<rows>-x<hash>``: the row count and the xor of per-row
+    xxhash64(vec_id, embedding). It folds in the embedding CONTENT, not
+    just the ids, so a rebuild over re-embedded vectors with identical
+    ids gets a different build_id."""
+    fp = embeddings.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.expr(
+                "bit_xor(xxhash64(cast(vec_id as string),"
+                " cast(embedding as string)))"
+            ),
+            F.lit(0),
+        ).alias("h"),
+    ).collect()[0]
+    return f"n{fp['n']}-x{fp['h']:x}"
+
+
+def _require_stamp(found, stamp: str, path: str, what: str) -> None:
+    """Raise unless every row of ``found`` (rows with a build_id, read
+    after pruning) carries the index's build stamp."""
+    builds = {r["build_id"] for r in found}
+    if builds - {stamp}:
+        raise ValueError(
+            f"index at {path} is inconsistent (torn rebuild?): {what} "
+            f"carry builds {sorted(builds)}, the index is {stamp!r}"
+        )
+
+
+def _centroid_list(cents: DataFrame) -> list:
+    """The stored centroids in cell order (k × dim, driver-small)."""
+    return [
+        [float(x) for x in r["centroid"]]
+        for r in cents.orderBy("cell").collect()
+    ]
+
+
 def build_ivf_index(
     embeddings: DataFrame,
     path: str,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
-    fit_sample_per_cell: int | None = 256,
 ) -> None:
     """Build and PERSIST an IVF index — the build-once / query-many split
     that ANN needs at corpus scale (rebuilding k-means per query, as
@@ -499,49 +525,29 @@ def build_ivf_index(
     Partitioning the vectors by cell is the point: the query path's probe
     filter becomes a PARTITION filter, so a query reads nprobe/k of the
     index files instead of scanning the corpus. Writes go through the
-    storage-format seam (parquet here, Iceberg in production)."""
+    storage-format seam (parquet here, Iceberg in production). The stamp
+    is ``k<centroids>-i<iters>-s<seed>-`` plus the content stamp; its k
+    is the FITTED centroid count, which the query path checks against
+    the centroids table."""
+    from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
     from pdftableextractor_spark.sources.tables import write_table
 
-    cents = kmeans_centroids(
-        embeddings, k=k, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
+    cents = kmeans_centroids(embeddings, k=k, iters=iters)
+    build_id = (
+        f"k{len(cents)}-i{iters}-s{_KMEANS_SEED}-"
+        f"{_content_stamp(embeddings)}"
     )
-    spark = embeddings.sparkSession
-    # consistency stamp: a rebuild that dies between the two writes would
-    # otherwise leave new centroids next to the previous run's vectors and
-    # the query path would silently probe a mismatched index. The stamp is
-    # deterministic (params + a data fingerprint — no wall clock), so an
-    # idempotent re-run of the SAME build converges to a consistent pair.
-    # the fingerprint folds in the embedding CONTENT, not just the ids: a
-    # rebuild over re-embedded vectors with identical ids must produce a
-    # DIFFERENT build_id, or a crash between the two writes would leave a
-    # mismatched pair the query-path check cannot see
-    fp = embeddings.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(
-                f"bit_xor(xxhash64(cast({id_col} as string),"
-                " cast(embedding as string)))"
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    build_id = f"k{k}-i{iters}-s{seed}-n{fp['n']}-x{fp['h']:x}"
-    cdf = spark.createDataFrame(
+    cdf = embeddings.sparkSession.createDataFrame(
         [(i, c, build_id) for i, c in enumerate(cents)],
         "cell int, centroid array<double>, build_id string",
     )
-    from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
-
     assigned = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         "embedding",
         nearest_centroid_udf(cents)(F.col("embedding")).alias("cell"),
         F.lit(build_id).alias("build_id"),
     )
-    # vectors FIRST, centroids LAST: the query path reads centroids and
-    # validates the stamp against the vectors table, so a torn build is
-    # detected rather than silently probed
+    # centroids last: the stamp rule in the module docstring
     write_table(assigned, f"{path}/vectors", partition_by=["cell"])
     write_table(cdf, f"{path}/centroids")
 
@@ -570,31 +576,18 @@ def ivf_topk_indexed(
     the comparison trips. (The one blind spot — every probed cell
     physically empty — also yields zero candidates, so nothing wrong is
     returned.)"""
-    cos = cosine_to_query_udf(query_vec)
+    _require_positive(k=k, nprobe=nprobe)
     cents, vecs_all, stamp = _validated_index(spark, path)
-    cb = {stamp}
     probes = [
         int(r["cell"])
-        for r in cents.select(
-            "cell", cos(F.col("centroid")).alias("ccos")
-        )
-        .orderBy(F.desc("ccos"), F.asc("cell"))
-        .limit(nprobe)
-        .collect()
+        for r in _probe_cells(cents, query_vec, nprobe).collect()
     ]
     vecs = vecs_all.filter(F.col("cell").isin(probes))
-    vb = {r["build_id"] for r in vecs.select("build_id").distinct().collect()}
-    if vb - cb:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"centroids build {sorted(cb)} vs probed vectors build "
-            f"{sorted(vb)}"
-        )
-    return (
-        vecs.select("vec_id", F.round(cos(F.col("embedding")), 6).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
+    _require_stamp(
+        vecs.select("build_id").distinct().collect(),
+        stamp, path, "probed IVF vectors",
     )
+    return _cos_topk(vecs, query_vec, k)
 
 
 def _validated_index(spark, path: str):
@@ -634,20 +627,19 @@ def ivf_topk_indexed_batch(
     path: str,
     k: int = 10,
     nprobe: int = 2,
-    qid_col: str = "qid",
-    qemb_col: str = "embedding",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Batch-query the persisted IVF index: a DATAFRAME of query vectors,
-    answered in ONE distributed job — the production shape for "embed a
-    new batch, find each item's neighbors in the corpus" (the per-vector
-    ``ivf_topk_indexed`` loop would launch one job per query).
+    """Batch-query the persisted IVF index: a DATAFRAME of (qid,
+    embedding) query vectors, answered in ONE distributed job — the
+    production shape for "embed a new batch, find each item's neighbors
+    in the corpus" (the per-vector ``ivf_topk_indexed`` loop would launch
+    one job per query).
 
-    Output: (qid, vec_id, cos, rnk) — same contract and tie semantics as
-    ``knn_join``. ``exclude_self`` defaults to False: the query table's id
-    namespace is generally unrelated to the index's vec_ids, and excluding
-    on numeric equality would silently drop a true neighbor; pass True
-    when querying the index BY its own vectors (kNN-graph over the index).
+    Output: (qid, vec_id, cos, rnk), as ``knn_join``. ``exclude_self``
+    defaults to False: the query table's id namespace is generally
+    unrelated to the index's vec_ids, and excluding on numeric equality
+    would silently drop a true neighbor; pass True when querying the
+    index BY its own vectors (kNN-graph over the index).
 
     Shape (the knn_join machinery pointed at a persisted index):
       1. open + validate the index (the O(k) stamp checks);
@@ -661,24 +653,20 @@ def ivf_topk_indexed_batch(
          only the cells it probes, never the whole index;
       4. validate the probed partitions' build stamp (same torn-rebuild
          check, still O(probed partitions));
-      5. cogroup queries × probed vectors on cell through
-         ``knn_block_kernel`` (one BLAS matmul per 1024-query block),
-         then the window-free per-query top-k reduce.
+      5. ``_cell_knn``: cogroup queries × probed vectors on cell (one
+         BLAS matmul per 1024-query block), then the per-query reduce.
     """
-    from pdftableextractor_spark.kernels.vectors import (
-        knn_block_kernel,
-        nearest_centroids_udf,
-    )
+    from pdftableextractor_spark.kernels.vectors import nearest_centroids_udf
 
+    _require_positive(k=k, nprobe=nprobe)
     cents, vecs_all, stamp = _validated_index(spark, path)
-    cent_rows = cents.orderBy("cell").collect()  # k × dim, driver-small
-    cent_list = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    idt = dict(vecs_all.dtypes)["vec_id"]
     qry = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.col(qemb_col).alias("qemb"),
+        "qid",
+        F.col("embedding").alias("qemb"),
         F.explode(
-            nearest_centroids_udf(cent_list, nprobe)(F.col(qemb_col))
+            nearest_centroids_udf(_centroid_list(cents), nprobe)(
+                F.col("embedding")
+            )
         ).alias("cell"),
         # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
         # dedup.containment_pairs (shared by every localCheckpoint here)
@@ -687,32 +675,19 @@ def ivf_topk_indexed_batch(
         int(r["cell"]) for r in qry.select("cell").distinct().collect()
     )
     vecs = vecs_all.filter(F.col("cell").isin(probed))
-    vb = {r["build_id"] for r in vecs.select("build_id").distinct().collect()}
-    if vb - {stamp}:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"centroids build [{stamp!r}] vs probed vectors build "
-            f"{sorted(vb)}"
-        )
-    cand = (
-        qry.groupBy("cell")
-        .cogroup(
-            vecs.select("cell", "vec_id", "embedding").groupBy("cell")
-        )
-        .applyInPandas(
-            knn_block_kernel(k, exclude_self=exclude_self),
-            schema=f"qid {dict(qry.dtypes)['qid']}, vec_id {idt}, "
-            "cos double",
-        )
+    _require_stamp(
+        vecs.select("build_id").distinct().collect(),
+        stamp, path, "probed IVF vectors",
     )
-    return _knn_reduce(cand, k)
+    return _cell_knn(
+        qry, vecs.select("cell", "vec_id", "embedding"), k, exclude_self
+    )
 
 
 def append_to_ivf_index(
     spark,
     new_embeddings: DataFrame,
     path: str,
-    id_col: str = "vec_id",
 ) -> int:
     """APPEND a batch of vectors to a persisted IVF index without
     refitting — the growth side of the incremental cadence
@@ -742,12 +717,12 @@ def append_to_ivf_index(
     from pdftableextractor_spark.sources.tables import write_table
 
     cents, _vecs_all, stamp = _validated_index(spark, path)
-    cent_rows = cents.orderBy("cell").collect()  # k x dim, driver-small
-    cent_list = [[float(x) for x in r["centroid"]] for r in cent_rows]
     assigned = new_embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         "embedding",
-        nearest_centroid_udf(cent_list)(F.col("embedding")).alias("cell"),
+        nearest_centroid_udf(_centroid_list(cents))(
+            F.col("embedding")
+        ).alias("cell"),
         F.lit(stamp).alias("build_id"),
     ).localCheckpoint(eager=True)
     # one materialization feeds both the count and the write — without it
@@ -847,7 +822,7 @@ def ivf_drift_report(
 # ---------------------------------------------------------------------------
 
 
-def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
+def sq8_scale(embeddings: DataFrame) -> float:
     """The global SQ8 quantization scale: max |v| over the row-normalized
     embedding values of the corpus.
 
@@ -860,7 +835,7 @@ def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
     from pdftableextractor_spark.kernels.vectors import sq8_absmax_partials
 
     rows = (
-        embeddings.select(emb_col)
+        embeddings.select("embedding")
         .mapInPandas(sq8_absmax_partials, schema="mx double")
         .collect()
     )
@@ -872,13 +847,8 @@ def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
     return mx
 
 
-def sq8_quantize(
-    embeddings: DataFrame,
-    scale: float,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Quantize an embedding column to symmetric SQ8 codes: (id_col, code
+def sq8_quantize(embeddings: DataFrame, scale: float) -> DataFrame:
+    """Quantize an embedding column to symmetric SQ8 codes: (vec_id, code
     array<int> of −128..127) of the row-normalized vectors under a fixed
     global ``scale`` (from ``sq8_scale``) — the storage form of the
     compressed ANN scan. Parquet bit-packs the small ints to about a byte
@@ -893,9 +863,17 @@ def sq8_quantize(
     from pdftableextractor_spark.kernels.vectors import sq8_code_udf
 
     code = sq8_code_udf(scale)
-    return embeddings.select(
-        F.col(id_col), code(F.col(emb_col)).alias("code")
-    )
+    return embeddings.select("vec_id", code(F.col("embedding")).alias("code"))
+
+
+def _sq8_qcode(query_vec, scale: float) -> list:
+    """The query's SQ8 codes under ``scale`` (the code rule above)."""
+    import numpy as np
+
+    from pdftableextractor_spark.kernels.vectors import _sq8_codes
+
+    q = np.asarray(list(query_vec), dtype=np.float64)
+    return _sq8_codes(q.reshape(1, -1), scale)[0].tolist()
 
 
 def sq8_topk(
@@ -903,8 +881,6 @@ def sq8_topk(
     query_vec,
     k: int = 10,
     rerank: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by cosine via symmetric SQ8 quantization with
     exact rerank — the compressed-scan ANN path (the scalar-quantization
@@ -921,57 +897,32 @@ def sq8_topk(
          or join-back,
       3. rerank the m·k survivors by exact cosine; emit the top k.
 
-    Result contract matches ``cosine_topk``: (vec_id, cos rounded to 6),
-    ties on vec_id. Approximate by construction — 8-bit codes can misrank
-    near-boundary candidates; ``rerank`` widens the net (recall→1 as it
-    grows). Every ordering decision is engine-exact: the candidate cut is
-    an integer sort with id ties, the final cosine reuses the q24 rounding
-    contract — so a SQL oracle replicates the result bit-for-bit.
+    Approximate by construction — 8-bit codes can misrank near-boundary
+    candidates; ``rerank`` widens the net (recall→1 as it grows). Every
+    ordering decision is engine-exact: the candidate cut is an integer
+    sort with id ties and the rerank is the module's ranking contract —
+    so a SQL oracle replicates the result bit-for-bit.
 
     Scale shape: two scans total (stats fold to #partitions rows;
     candidate pass with size-m·k heaps) and no shuffle beyond the
     TakeOrdered merge. With codes materialized via ``sq8_quantize`` the
     candidate pass reads the ~4×-smaller code table instead."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if rerank < 1:
-        raise ValueError(f"rerank must be >= 1, got {rerank}")
-    import numpy as np
+    _require_positive(k=k, rerank=rerank)
+    from pdftableextractor_spark.kernels.vectors import sq8_adot_to_query_udf
 
-    from pdftableextractor_spark.kernels.vectors import (
-        _sq8_codes,
-        sq8_adot_to_query_udf,
-    )
-
-    scale = sq8_scale(embeddings, emb_col=emb_col)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qcode = _sq8_codes(q.reshape(1, -1), scale)[0]
-    adot = sq8_adot_to_query_udf(scale, qcode.tolist())
+    scale = sq8_scale(embeddings)
+    adot = sq8_adot_to_query_udf(scale, _sq8_qcode(query_vec, scale))
     cand = (
         embeddings.select(
-            F.col(id_col),
-            F.col(emb_col),
-            adot(F.col(emb_col)).alias("__adot"),
+            "vec_id", "embedding", adot(F.col("embedding")).alias("__adot")
         )
-        .orderBy(F.desc("__adot"), F.asc(id_col))
+        .orderBy(F.desc("__adot"), F.asc("vec_id"))
         .limit(k * rerank)
     )
-    cos = cosine_to_query_udf(query_vec)
-    return (
-        cand.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cos(F.col(emb_col)), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _cos_topk(cand, query_vec, k)
 
 
-def build_sq8_index(
-    embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-) -> None:
+def build_sq8_index(embeddings: DataFrame, path: str) -> None:
     """Build and PERSIST an SQ8 index — the build-once / query-many split
     for the compressed-scan ANN path (``sq8_topk`` refits the scale and
     rescans float32 per query; production quantizes once):
@@ -983,12 +934,9 @@ def build_sq8_index(
                       reads only this table
       <path>/meta     (scale double, build_id string)   1 row
 
-    Same torn-rebuild discipline as ``build_ivf_index``: the build_id is
-    deterministic (row count + content fingerprint — no wall clock), the
-    scan/fetch tables are written BEFORE meta, and the query path
-    validates the stamps it actually touches (candidates + fetched
-    rows, O(rerank·k)) against meta's, so a build that died between
-    writes is detected rather than silently served."""
+    The stamp is ``sq8-`` plus the content stamp; meta is written last,
+    and the query path validates the stamps it actually touches
+    (candidates + fetched rows, O(rerank·k)) against meta's."""
     from pdftableextractor_spark.sources.tables import write_table
 
     spark = embeddings.sparkSession
@@ -1001,30 +949,16 @@ def build_sq8_index(
     # TRADE note on dedup.containment_pairs.
     embeddings = embeddings.localCheckpoint(eager=True)
     scale = sq8_scale(embeddings)
-    fp = embeddings.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(
-                f"bit_xor(xxhash64(cast({id_col} as string),"
-                " cast(embedding as string)))"
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    build_id = f"sq8-n{fp['n']}-x{fp['h']:x}"
+    build_id = f"sq8-{_content_stamp(embeddings)}"
     write_table(
         embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            "embedding",
-            F.lit(build_id).alias("build_id"),
+            "vec_id", "embedding", F.lit(build_id).alias("build_id")
         ),
         f"{path}/vectors",
     )
     write_table(
-        sq8_quantize(embeddings, scale, id_col=id_col).select(
-            F.col(id_col).alias("vec_id"),
-            "code",
-            F.lit(build_id).alias("build_id"),
+        sq8_quantize(embeddings, scale).select(
+            "vec_id", "code", F.lit(build_id).alias("build_id")
         ),
         f"{path}/codes",
     )
@@ -1056,16 +990,8 @@ def sq8_topk_indexed(
     checked against it post-limit — O(rerank·k) validation, never a
     full-index pass. A torn rebuild (codes from one build next to
     vectors or meta from another) trips one of the two checks."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if rerank < 1:
-        raise ValueError(f"rerank must be >= 1, got {rerank}")
-    import numpy as np
-
-    from pdftableextractor_spark.kernels.vectors import (
-        _sq8_codes,
-        sq8_adot_codes_udf,
-    )
+    _require_positive(k=k, rerank=rerank)
+    from pdftableextractor_spark.kernels.vectors import sq8_adot_codes_udf
     from pdftableextractor_spark.sources.tables import read_path
 
     meta = read_path(spark, f"{path}/meta").collect()
@@ -1075,9 +1001,7 @@ def sq8_topk_indexed(
             f"{len(meta)} rows"
         )
     scale, stamp = float(meta[0]["scale"]), meta[0]["build_id"]
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qcode = _sq8_codes(q.reshape(1, -1), scale)[0]
-    adot = sq8_adot_codes_udf(qcode.tolist())
+    adot = sq8_adot_codes_udf(_sq8_qcode(query_vec, scale))
     cand = (
         read_path(spark, f"{path}/codes")
         .select("vec_id", "build_id", adot(F.col("code")).alias("__adot"))
@@ -1085,12 +1009,7 @@ def sq8_topk_indexed(
         .limit(k * rerank)
         .collect()
     )
-    cb = {r["build_id"] for r in cand}
-    if cb - {stamp}:
-        raise ValueError(
-            f"SQ8 index at {path} is inconsistent (torn rebuild?): meta "
-            f"build {stamp!r} vs candidate codes {sorted(cb)}"
-        )
+    _require_stamp(cand, stamp, path, "SQ8 candidate codes")
     ids = [r["vec_id"] for r in cand]
     cos = cosine_to_query_udf(query_vec)
     fetched = (
@@ -1103,16 +1022,8 @@ def sq8_topk_indexed(
         )
         .localCheckpoint(eager=True)
     )
-    vb = {
-        r["build_id"] for r in fetched.select("build_id").distinct().collect()
-    }
-    if vb - {stamp}:
-        raise ValueError(
-            f"SQ8 index at {path} is inconsistent (torn rebuild?): meta "
-            f"build {stamp!r} vs fetched vectors {sorted(vb)}"
-        )
-    return (
-        fetched.select("vec_id", "cos")
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
+    _require_stamp(
+        fetched.select("build_id").distinct().collect(),
+        stamp, path, "SQ8 fetched vectors",
     )
+    return _ranked(fetched.select("vec_id", "cos"), k)

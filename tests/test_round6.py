@@ -128,6 +128,73 @@ def test_ivf_drift_report_degenerate_median(spark, tmp_path):
         assert r["total_vectors"] == 100
 
 
+_DIRECTIONS = [
+    [1.0, 0.0, 0.0],
+    [0.0, 1.0, 0.0],
+    [0.0, 0.0, 1.0],
+    [-1.0, 0.0, 0.0],
+    [0.0, -1.0, 0.0],
+]
+
+
+def _small_ivf_index(spark, tmp_path, k):
+    """An IVF index over five distinct-direction vectors."""
+    from pdftableextractor_spark.operators.similarity import build_ivf_index
+
+    emb = spark.createDataFrame(
+        list(enumerate(_DIRECTIONS)), "vec_id bigint, embedding array<double>"
+    )
+    idx = str(tmp_path / "ivf_small")
+    build_ivf_index(emb, idx, k=k, iters=2)
+    return emb, idx
+
+
+def test_ivf_index_with_fewer_vectors_than_k_is_readable(spark, tmp_path):
+    """k above the vector count fits one centroid per vector; the build
+    stamp records the fitted count, so every read path opens the index
+    and each query finds its own vector first."""
+    from pdftableextractor_spark.operators.similarity import (
+        ivf_drift_report,
+        ivf_topk_indexed,
+        ivf_topk_indexed_batch,
+    )
+
+    emb, idx = _small_ivf_index(spark, tmp_path, k=8)
+    assert ivf_drift_report(spark, idx)["k"] == len(_DIRECTIONS)
+    hits = ivf_topk_indexed(spark, idx, _DIRECTIONS[2], k=3).collect()
+    assert (hits[0]["vec_id"], hits[0]["cos"]) == (2, 1.0)
+    out = ivf_topk_indexed_batch(
+        spark, emb.select(F.col("vec_id").alias("qid"), "embedding"), idx, k=3
+    ).collect()
+    top1 = {r["qid"]: r["vec_id"] for r in out if r["rnk"] == 1}
+    assert top1 == {i: i for i in range(len(_DIRECTIONS))}
+
+
+@pytest.mark.parametrize("batch", [False, True], ids=["single", "batch"])
+def test_ivf_index_query_rejects_nonpositive_k_and_nprobe(
+    spark, tmp_path, batch
+):
+    """k and nprobe arrive from the job's --topk/--nprobe: a value below
+    1 must raise, not return no rows or probe k-1 cells."""
+    from pdftableextractor_spark.operators.similarity import (
+        ivf_topk_indexed,
+        ivf_topk_indexed_batch,
+    )
+
+    emb, idx = _small_ivf_index(spark, tmp_path, k=2)
+    queries = emb.select(F.col("vec_id").alias("qid"), "embedding")
+    for k, nprobe, name in [(0, 2, "k"), (3, 0, "nprobe"), (3, -1, "nprobe")]:
+        with pytest.raises(ValueError, match=f"^{name} must be >= 1"):
+            if batch:
+                ivf_topk_indexed_batch(
+                    spark, queries, idx, k=k, nprobe=nprobe
+                ).collect()
+            else:
+                ivf_topk_indexed(
+                    spark, idx, _DIRECTIONS[0], k=k, nprobe=nprobe
+                ).collect()
+
+
 def test_ann_job_check_mode_end_to_end(spark, tmp_path):
     """jobs/ann.py check: flags drift, and with --rebuild refits in
     place from --input; prints one valid JSON line with pre/post
@@ -1563,6 +1630,71 @@ def test_ann_job_sq8_build_and_query_end_to_end(tmp_path):
     assert rep["cmd"] == "sq8-query"
     assert len(rep["hits"]) == 5
     assert rep["hits"][0] == {"vec_id": 0, "cos": 1.0}
+
+
+def test_ann_job_ivf_lifecycle_end_to_end(tmp_path):
+    """jobs/ann.py build, query --query-id, query --query-table --output
+    and append: each prints one JSON line with its keys in order; the
+    single query finds its own vector first, the batch writes at most
+    topk rows per query, and append reports the batch size."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import SF_DEFAULT as sf
+
+    idx = str(tmp_path / "ivf_job")
+    table = pq.read_table(
+        f"{sf}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    qids = [0, 7, 42]
+    queries = table.filter(
+        pc.is_in(table["vec_id"], pa.array(qids, pa.int64()))
+    )
+    pq.write_table(queries, tmp_path / "queries.parquet")
+    (tmp_path / "batch").mkdir()
+    batch = queries.set_column(
+        0, "vec_id", pc.add(queries["vec_id"], 100_000)
+    )
+    pq.write_table(batch, tmp_path / "batch" / "embeddings.parquet")
+    env = {**os.environ, "PYTHONPATH": REPO}
+
+    def run(*argv):
+        out = subprocess.run(
+            [
+                sys.executable, os.path.join(REPO, "jobs", "ann.py"), *argv,
+                "--index", idx, "--master", "local[4]",
+            ],
+            capture_output=True, text=True, env=env, timeout=600,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+        assert len(lines) == 1, out.stdout
+        return json.loads(lines[0])
+
+    rep = run("build", "--input", sf, "--k", "8", "--iters", "2")
+    assert list(rep) == ["cmd", "vectors", "k", "sec"]
+    assert (rep["cmd"], rep["vectors"], rep["k"]) == ("build", 500, 8)
+
+    rep = run("query", "--input", sf, "--query-id", "0", "--topk", "5")
+    assert list(rep) == ["cmd", "query_id", "hits", "sec"]
+    assert rep["hits"][0] == {"vec_id": 0, "cos": 1.0}
+    assert len(rep["hits"]) == 5
+
+    rep = run(
+        "query", "--input", sf, "--topk", "5",
+        "--query-table", str(tmp_path / "queries.parquet"),
+        "--output", str(tmp_path / "knn"),
+    )
+    assert list(rep) == [
+        "cmd", "mode", "rows_out", "topk", "nprobe", "sec"
+    ]
+    assert rep["mode"] == "batch"
+    assert 0 < rep["rows_out"] <= 5 * len(qids)
+
+    rep = run("append", "--input", str(tmp_path / "batch"))
+    assert list(rep) == ["cmd", "appended", "sec"]
+    assert rep["appended"] == len(qids)
 
 
 def test_curate_funnel_dsir_select_end_to_end(tmp_path):
